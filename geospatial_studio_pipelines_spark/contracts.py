@@ -886,8 +886,8 @@ WITH fp AS (
   SELECT *,
          CASE WHEN px_w > 2400 OR px_h > 2400 THEN CAST(floor(px_w / 2200.0) AS BIGINT) ELSE 0 END AS num_lon,
          CASE WHEN px_w > 2400 OR px_h > 2400 THEN CAST(floor(px_h / 2200.0) AS BIGINT) ELSE 0 END AS num_lat,
-         (maxx - minx) * (2200.0 / px_w) AS lon_step,
-         (maxy - miny) * (2200.0 / px_h) AS lat_step
+         (maxx - minx) * CASE WHEN px_w > 2400 OR px_h > 2400 THEN 2200.0 / px_w ELSE 1.0 END AS lon_step,
+         (maxy - miny) * CASE WHEN px_w > 2400 OR px_h > 2400 THEN 2200.0 / px_h ELSE 1.0 END AS lat_step
   FROM dims
 ), tiles AS (
   SELECT s.*, CAST(tx.g AS INT) AS tile_x, CAST(ty.g AS INT) AS tile_y

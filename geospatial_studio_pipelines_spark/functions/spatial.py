@@ -39,9 +39,11 @@ def center_lon(phash: Column) -> Column:
 
 
 def center_lat(phash: Column) -> Column:
-    """lat = -60 + ((phash // 360000) % 120000)/1000."""
+    """lat = -60 + ((phash // 360000) % 120000)/1000, in integer arithmetic
+    (a double cannot hold a phash above 2^53 exactly)."""
     return (
-        F.pmod(F.floor(phash / F.lit(360_000)), F.lit(120_000)) / F.lit(1000.0) + F.lit(-60.0)
+        F.pmod(F.call_function("div", phash, F.lit(360_000)), F.lit(120_000)) / F.lit(1000.0)
+        + F.lit(-60.0)
     ).alias("lat")
 
 

@@ -98,6 +98,8 @@ def broadcast_spatial_join(
         tree: STRtree = aois["tree"]
         rings = aois["rings"]
         ids = aois["ids"]
+        # typed: a batch without pairs would otherwise get Arrow type null
+        id_arrow = pa.int64() if aoi_type == "bigint" else pa.string()
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -114,7 +116,7 @@ def broadcast_spatial_join(
                 keep[sel] = G.polygon_intersects_boxes(rings[t], qboxes[qi[sel]])
             qi, ti = qi[keep], ti[keep]
             idx = pa.array(qi)
-            arrays = [pc.take(col[id_col], idx), pa.array(ids[ti])]
+            arrays = [pc.take(col[id_col], idx), pa.array(ids[ti], type=id_arrow)]
             for c in extra_cols:
                 arrays.append(pc.take(col[c], idx))
             yield pa.record_batch(arrays, names=[id_col, "aoi_id", *extra_cols])

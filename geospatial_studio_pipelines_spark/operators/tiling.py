@@ -241,6 +241,7 @@ def grid_tiles_expr(df: DataFrame, resolution_m: float = 10.0) -> DataFrame:
     tile_w_px, tile_h_px. Mirrors ``tile_bbox`` (inference_planner_functions
     .py:46-68): numLon=floor(w_px/2200) etc.; each grid step is
     (extent × 2200/size_px); the last row/column is clamped to the bbox edge.
+    A bbox of at most 2400 px in both dims is one tile over its whole extent.
     """
     res_lat = S.resolution_deg_lat((F.col("miny") + F.col("maxy")) / 2, resolution_m)
     res_lon = S.resolution_deg_lon((F.col("miny") + F.col("maxy")) / 2, resolution_m)
@@ -250,8 +251,9 @@ def grid_tiles_expr(df: DataFrame, resolution_m: float = 10.0) -> DataFrame:
     needs_split = (F.col("px_w") > MAX_TILE_PX) | (F.col("px_h") > MAX_TILE_PX)
     num_lon = F.when(needs_split, F.floor(F.col("px_w") / GRID_TILE_PX)).otherwise(F.lit(0))
     num_lat = F.when(needs_split, F.floor(F.col("px_h") / GRID_TILE_PX)).otherwise(F.lit(0))
-    lon_step = (F.col("maxx") - F.col("minx")) * (GRID_TILE_PX / F.col("px_w"))
-    lat_step = (F.col("maxy") - F.col("miny")) * (GRID_TILE_PX / F.col("px_h"))
+    # a bbox that needs no split is one tile: its step spans the whole extent
+    lon_step = (F.col("maxx") - F.col("minx")) * F.when(needs_split, GRID_TILE_PX / F.col("px_w")).otherwise(1.0)
+    lat_step = (F.col("maxy") - F.col("miny")) * F.when(needs_split, GRID_TILE_PX / F.col("px_h")).otherwise(1.0)
     df = (
         df.withColumn("tile_x", F.explode(F.sequence(F.lit(0), num_lon)))
         .withColumn("tile_y", F.explode(F.sequence(F.lit(0), num_lat)))

@@ -28,46 +28,49 @@ per-task config files, the engine does with:
   entry and committed output exist; outputs are byte-stable because every
   generator/operator is a pure function of its input (no wall clock, no
   unseeded RNG — SURVEY §7.4.5)
-* **per-partition metrics** — a pass-through ``mapInPandas`` counts rows and
-  payload bytes per partition into an accumulator; the driver appends
+* **per-partition metrics** — read on the driver from the committed files,
+  with no Spark job: rows from each parquet footer and bytes as the file's
+  on-disk size, keyed by the partition number in the file name (the
+  table's ``.files`` metadata under Iceberg). The driver appends
   ``(job_id, stage, partition_id, rows, bytes, wall_ms, ts)`` rows to the
-  metrics table (replaces ``metrics.py:13-88``'s OpenTelemetry histogram
-  with queryable lineage).
+  metrics table with pyarrow (replaces ``metrics.py:13-88``'s
+  OpenTelemetry histogram with queryable lineage).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 from typing import Callable
 
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-class _DictAccum(AccumulatorParam):
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            if k in a:
-                a[k] = (a[k][0] + v[0], a[k][1] + v[1])
-            else:
-                a[k] = v
-        return a
-
 
 METRICS_SCHEMA = (
     "job_id string, stage string, partition_id int, rows long, bytes long, "
     "wall_ms double, ts timestamp"
 )
 CHECKPOINT_SCHEMA = "job_id string, stage string, snapshot_id long, committed_at timestamp"
+
+
+def _partition_metrics(files) -> dict[int, tuple[int, int]]:
+    """(path, rows, bytes) of committed data files → {partition: (rows,
+    bytes)}. The partition is the file name's leading number:
+    ``part-00003-<uuid>-c000.snappy.parquet`` (Spark),
+    ``00003-<task>-<uuid>-00001.parquet`` (Iceberg)."""
+    out: dict[int, tuple[int, int]] = {}
+    for path, rows, nbytes in files:
+        pid = int(os.path.basename(path).removeprefix("part-").split("-")[0])
+        r, b = out.get(pid, (0, 0))
+        out[pid] = (r + rows, b + nbytes)
+    return out
 
 
 @dataclass
@@ -127,6 +130,12 @@ class _IcebergSnapshots:
         ).first()
         return int(snap["snapshot_id"])
 
+    def partition_metrics(self, stage: str) -> dict[int, tuple[int, int]]:
+        files = self.spark.sql(
+            f"SELECT file_path, record_count, file_size_in_bytes FROM {self._table(stage)}.files"
+        ).collect()
+        return _partition_metrics(files)
+
 
 class _ParquetSnapshots:
     """Jar-free fallback with the same atomicity contract: temp dir →
@@ -152,6 +161,11 @@ class _ParquetSnapshots:
             shutil.rmtree(out_path)
         os.rename(tmp_path, out_path)  # atomic snapshot commit
         return None  # ledger assigns the monotonic id
+
+    def partition_metrics(self, stage: str) -> dict[int, tuple[int, int]]:
+        out = self.p._stage_path(stage)
+        paths = [os.path.join(out, f) for f in glob.glob("part-*.parquet", root_dir=out)]
+        return _partition_metrics((f, pq.read_metadata(f).num_rows, os.path.getsize(f)) for f in paths)
 
 
 class Pipeline:
@@ -213,58 +227,41 @@ class Pipeline:
         return snapshot_id
 
     def _append_metrics(self, stage: str, wall_ms: float, part_metrics: dict) -> None:
-        rows = [
+        """One parquet file per (job, stage), committed by temp file →
+        fsync → rename like the ledger; Spark's reader skips ``.``-files."""
+        parts = sorted(part_metrics.items()) or [(-1, (0, 0))]
+        n = len(parts)
+        table = pa.table(
             {
-                "job_id": self.job_id,
-                "stage": stage,
-                "partition_id": int(pid),
-                "rows": int(cnt),
-                "bytes": int(nbytes),
-                "wall_ms": float(wall_ms),
-                "ts": pd.Timestamp.utcnow().tz_localize(None),
+                "job_id": [self.job_id] * n,
+                "stage": [stage] * n,
+                "partition_id": pa.array([pid for pid, _ in parts], pa.int32()),
+                "rows": [cnt for _, (cnt, _) in parts],
+                "bytes": [nbytes for _, (_, nbytes) in parts],
+                "wall_ms": [float(wall_ms)] * n,
+                # zoned: Spark reads a zone-less timestamp as timestamp_ntz
+                "ts": pa.array([datetime.now(timezone.utc)] * n, pa.timestamp("us", tz="UTC")),
             }
-            for pid, (cnt, nbytes) in sorted(part_metrics.items())
-        ] or [
-            {
-                "job_id": self.job_id,
-                "stage": stage,
-                "partition_id": -1,
-                "rows": 0,
-                "bytes": 0,
-                "wall_ms": float(wall_ms),
-                "ts": pd.Timestamp.utcnow().tz_localize(None),
-            }
-        ]
-        df = self.spark.createDataFrame(pd.DataFrame(rows), METRICS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(os.path.join(self.warehouse, "metrics"))
+        )
+        out_dir = os.path.join(self.warehouse, "metrics")
+        os.makedirs(out_dir, exist_ok=True)
+        name = f"{self.job_id}__{stage}.parquet"
+        tmp = os.path.join(out_dir, f".{name}.tmp")
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.rename(tmp, os.path.join(out_dir, name))
 
     # -------------------------------------------------------------- run
-
-    def _instrument(self, df: DataFrame, accum) -> DataFrame:
-        """Pass-through partition metering (rows + payload bytes)."""
-        schema = df.schema
-
-        def meter(iterator):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in iterator:
-                nbytes = int(pdf.memory_usage(deep=True).sum())
-                accum.add({pid: (len(pdf), nbytes)})
-                yield pdf
-
-        return df.mapInPandas(meter, schema)
 
     def run_stage(self, stage: Stage, inp: DataFrame | None) -> DataFrame:
         if self.committed(stage.name):
             return self._store.read(stage.name)
-        accum = self.spark.sparkContext.accumulator({}, _DictAccum())
         t0 = time.time()
-        out = stage.fn(inp)
-        out = self._instrument(out, accum)
-        snapshot_id = self._store.write(out, stage.name)
+        snapshot_id = self._store.write(stage.fn(inp), stage.name)
         wall_ms = (time.time() - t0) * 1000.0
-        self._commit(stage.name, wall_ms, dict(accum.value), snapshot_id)
+        self._commit(stage.name, wall_ms, self._store.partition_metrics(stage.name), snapshot_id)
         return self._store.read(stage.name)
 
     def run(self, stages: list[Stage], source: DataFrame | None = None) -> DataFrame:
@@ -287,5 +284,6 @@ class Pipeline:
         pdf = pd.DataFrame(
             entries, columns=["job_id", "stage", "snapshot_id", "committed_at", "wall_ms"]
         ).sort_values("snapshot_id")
-        pdf["committed_at"] = pd.to_datetime(pdf["committed_at"], unit="s")
+        # Spark timestamps hold microseconds; Arrow refuses to drop the rest
+        pdf["committed_at"] = pd.to_datetime(pdf["committed_at"], unit="s").dt.floor("us")
         return self.spark.createDataFrame(pdf[["job_id", "stage", "snapshot_id", "committed_at"]], CHECKPOINT_SCHEMA)

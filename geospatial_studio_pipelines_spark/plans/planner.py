@@ -4,7 +4,8 @@ The reference's ``inference_planner.py:62-267`` turns a request config into
 DB task rows: parse spatial_domain (bbox | polygons→bbox | urls | tiles) ×
 temporal_domain, grid-tile oversized bboxes, pad small ones, as-of match
 secondary modalities, insert tasks. Here the same request becomes a
-**DataFrame program**: request → tiles DF (sequence/explode grid) × dates →
+**DataFrame program**: request → one inline row per bbox → tiles
+(sequence/explode grid) → one row per tile and date (a second inline) →
 as-of join → ``tile_assignments`` rows. No queue table — at scale the rows
 *are* the units of parallelism, partitioned by cell id.
 
@@ -20,8 +21,8 @@ Request dict shape (mirrors inference_config_template.json:2-338):
 from __future__ import annotations
 
 import re
+from datetime import date
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,56 +69,39 @@ def plan_tiles(spark: SparkSession, request: dict, cell_res: int = 7) -> DataFra
     """Request → tile_assignments DataFrame.
 
     Output: (inference_id, aoi_idx, tile_x, tile_y, tile bbox, tile px dims,
-    date_start, date_end, cell_id, task_id). Tile generation is the
-    sequence/explode grid of operators.tiling (W1/W2 semantics); task ids
-    are deterministic (dense rank over the natural key — replaces the
-    reference's task_{i} minting at inference_planner.py:99)."""
+    date_start, date_end, cell_id, task_id). The request's bboxes and dates
+    enter the plan as literal arrays expanded with ``inline``, so the plan
+    is one codegen stage with no join and no driver-side relation. Tile
+    generation is the sequence/explode grid of operators.tiling (W1/W2
+    semantics); task ids are deterministic (built from the natural key —
+    replaces the reference's task_{i} minting at inference_planner.py:99)."""
     bboxes = parse_spatial_domain(request)
-    dates = parse_temporal_domain(request)
+    dates = [tuple(map(date.fromisoformat, d)) for d in parse_temporal_domain(request)]
     res_m = float(request.get("resolution_m", 10.0))
 
-    bbox_df = spark.createDataFrame(
-        [(i, a, b, c, d) for i, (a, b, c, d) in enumerate(bboxes)],
-        "aoi_idx int, minx double, miny double, maxx double, maxy double",
+    aois = _literal_rows(
+        ("aoi_idx", "minx", "miny", "maxx", "maxy"), [(i, *map(float, b)) for i, b in enumerate(bboxes)]
     )
-    tiles = tiling.grid_tiles_expr(bbox_df, res_m)
-    dates_df = spark.createDataFrame(dates, "date_start string, date_end string").select(
-        F.to_date("date_start").alias("date_start"), F.to_date("date_end").alias("date_end")
-    )
-    out = tiles.crossJoin(dates_df)  # planner's tiles × temporal cross product (:173-176)
+    tiles = tiling.grid_tiles_expr(spark.range(1).select(F.inline(aois)), res_m)
+    # every tile once per date: the planner's tiles × temporal fan-out (:173-176)
+    out = tiles.select("*", F.inline(_literal_rows(("date_start", "date_end"), dates)))
+    job = F.lit(request.get("inference_id", "job"))
     cx = (F.col("tile_minx") + F.col("tile_maxx")) / 2
     cy = (F.col("tile_miny") + F.col("tile_maxy")) / 2
-    out = out.withColumn("cell_id", hex_cell(cy, cx, cell_res))
-    out = out.withColumn(
-        "task_id",
-        F.concat(
-            F.lit(request.get("inference_id", "job")),
-            F.lit("-t"),
-            F.col("aoi_idx").cast("string"),
-            F.lit("-"),
-            F.col("tile_x").cast("string"),
-            F.lit("_"),
-            F.col("tile_y").cast("string"),
-            F.lit("-"),
-            F.date_format("date_start", "yyyyMMdd"),
-        ),
-    ).withColumn("inference_id", F.lit(request.get("inference_id", "job")))
     return out.select(
-        "inference_id",
-        "task_id",
-        "aoi_idx",
-        "tile_x",
-        "tile_y",
-        "tile_minx",
-        "tile_miny",
-        "tile_maxx",
-        "tile_maxy",
-        "tile_w_px",
-        "tile_h_px",
-        "date_start",
-        "date_end",
-        "cell_id",
+        job.alias("inference_id"),
+        F.format_string(
+            "%s-t%d-%d_%d-%s", job, "aoi_idx", "tile_x", "tile_y", F.date_format("date_start", "yyyyMMdd")
+        ).alias("task_id"),
+        "aoi_idx", "tile_x", "tile_y", "tile_minx", "tile_miny", "tile_maxx", "tile_maxy",
+        "tile_w_px", "tile_h_px", "date_start", "date_end",
+        hex_cell(cy, cx, cell_res).alias("cell_id"),
     )
+
+
+def _literal_rows(names: tuple[str, ...], rows: list[tuple]):
+    """Driver-side rows as one array-of-structs literal, for ``F.inline``."""
+    return F.array(*[F.struct(*[F.lit(v).alias(n) for n, v in zip(names, row)]) for row in rows])
 
 
 def plan_oracle(request: dict) -> list[dict]:

@@ -42,7 +42,7 @@ def spark_session(
     larger imagery. Relational-only jobs may raise it.
     """
     if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        master = _default_master()
     cores = _parallelism_of(master)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
@@ -181,13 +181,19 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _default_master() -> str:
+    """$SPARK_GRAFT_MASTER, else local[$SPARK_GRAFT_CPUS], else every CPU."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return os.environ.get("SPARK_GRAFT_MASTER") or (f"local[{cpus}]" if cpus else "local[*]")
+
+
 def _parallelism_of(master: str) -> int:
     if master.startswith("local["):
         inner = master[len("local[") : -1]
         if inner == "*":
             return os.cpu_count() or 8
         return int(inner)
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
 
 
 def stop_all() -> None:

@@ -41,6 +41,20 @@ def test_footprint_matches_oracle(images_fp):
         assert np.allclose(got[c], exp[c], rtol=0, atol=1e-12), c
 
 
+def test_center_lat_exact_for_large_phash(spark):
+    """FIXTURES.md's integer formula holds where a double cannot carry the
+    phash exactly (phash > 2^53)."""
+    phash = np.random.default_rng(53).integers(2**53, 2**63 - 1, size=4000, dtype=np.int64)
+    got = (
+        spark.createDataFrame([(int(v),) for v in phash], "phash long")
+        .select("phash", S.center_lat(F.col("phash")))
+        .toPandas()
+        .sort_values("phash")
+    )
+    want = -60.0 + ((got["phash"].to_numpy() // 360_000) % 120_000) / 1000.0
+    assert np.array_equal(got["lat"].to_numpy(), want)
+
+
 @pytest.mark.parametrize("res", [5, 9, 12])
 def test_hex_cell_expression_matches_numpy(images_fp, res):
     got = images_fp.select("image_id", "lat", "lon", S.hex_cell(F.col("lat"), F.col("lon"), res).alias("c")).toPandas()

@@ -1,14 +1,18 @@
 """Pipeline checkpoints, resume, metrics, lineage (FIXTURES T7)."""
 
+import math
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from geospatial_studio_pipelines_spark import datagen
 from geospatial_studio_pipelines_spark.operators import footprints, tiling
-from geospatial_studio_pipelines_spark.plans.pipeline import Pipeline, Stage
+from geospatial_studio_pipelines_spark.plans.pipeline import METRICS_SCHEMA, Pipeline, Stage
+
+# an Arrow fallback in createDataFrame warns and converts row by row
+pytestmark = pytest.mark.filterwarnings("error::UserWarning")
 
 
 @pytest.fixture()
@@ -42,13 +46,20 @@ def test_pipeline_runs_and_writes_tables(spark, warehouse):
     cps = p.checkpoints().collect()
     assert [r.stage for r in cps] == ["footprints", "cells", "cell_counts"]
     assert [r.snapshot_id for r in cps] == [1, 2, 3]
-    m = p.metrics().toPandas()
+    metrics = p.metrics()
+    assert metrics.schema == StructType.fromDDL(METRICS_SCHEMA)
+    m = metrics.toPandas()
     assert set(m["stage"]) == {"footprints", "cells", "cell_counts"}
-    # per-partition lineage: one row per (stage, partition) with real counts
-    fp_rows = m[m["stage"] == "footprints"]
-    assert fp_rows["rows"].sum() == 100
-    assert (fp_rows["bytes"] > 0).all()
-    assert fp_rows["partition_id"].is_unique
+    assert m[m["stage"] == "footprints"]["rows"].sum() == 100
+    # per-partition lineage read from the committed files: rows sum to the
+    # stage's row count, bytes to the on-disk size of its part files
+    for stage in ["footprints", "cells", "cell_counts"]:
+        d = os.path.join(warehouse, "job1", stage)
+        parts = [f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")]
+        rows = m[m["stage"] == stage]
+        assert rows["partition_id"].is_unique
+        assert rows["rows"].sum() == spark.read.parquet(d).count()
+        assert rows["bytes"].sum() == sum(os.path.getsize(os.path.join(d, f)) for f in parts)
 
 
 def test_pipeline_resume_skips_committed_and_is_byte_identical(spark, warehouse):
@@ -109,3 +120,43 @@ def test_backend_iceberg_forced_without_jars_errors(spark, warehouse):
 
     with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
         Pipeline(spark, warehouse, job_id="jobIce", backend="iceberg")
+
+
+def test_stage_write_is_unwrapped_and_metrics_append_runs_no_job(spark, warehouse):
+    p = Pipeline(spark, warehouse, job_id="jobW")
+    made, written = [], []
+    write = p._store.write
+
+    def spy(df, stage):
+        written.append(df)
+        return write(df, stage)
+
+    def fn(_):
+        made.append(spark.range(10).withColumn("y", F.col("id") * 2))
+        return made[0]
+
+    p._store.write = spy
+    p.run_stage(Stage("s", fn), None)
+    assert written[0] is made[0]  # the store writes the stage's own plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-append", "metrics append")
+    try:
+        p._append_metrics("s", 1.0, {0: (10, 100)})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("metrics-append") == []
+
+
+def test_stage_output_nan_is_committed_as_nan(spark, warehouse):
+    def fn(_):
+        k = F.col("id")
+        x = F.when(k == 1, F.lit(float("nan"))).when(k == 2, F.lit(None).cast("double"))
+        return spark.range(3).select(k, x.otherwise(k.cast("double")).alias("x"))
+
+    out = Pipeline(spark, warehouse, job_id="jobNaN").run_stage(Stage("vals", fn), None)
+    got = {r.id: r.x for r in out.collect()}
+    assert got[0] == 0.0
+    assert got[1] is not None and math.isnan(got[1])
+    assert got[2] is None

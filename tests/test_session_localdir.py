@@ -48,3 +48,12 @@ def test_sweep_keeps_everything_when_jvm_alive(tmp_path, monkeypatch):
 def test_any_java_alive_detects_this_test_process_absence():
     # deterministic contract: returns a bool and doesn't raise
     assert S._any_java_alive() in (True, False)
+
+
+def test_default_master_uses_the_host_cpus(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    master = S._default_master()
+    assert master == "local[*]"
+    assert S._parallelism_of(master) == os.cpu_count()
+    assert S._parallelism_of("spark://host:7077") == os.cpu_count()

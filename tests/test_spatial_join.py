@@ -46,6 +46,20 @@ def test_broadcast_join_extra_cols(spark, setup):
         assert cap == f"synthetic scene {i} tile test"
 
 
+def test_broadcast_join_batches_without_pairs(spark, setup):
+    """One task yields record batches with and without pairs; both must
+    carry the declared aoi_id type (string ids here)."""
+    images_fp, aoi_pdf, oracle = setup
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = spatial_join.broadcast_spatial_join(images_fp.coalesce(1), aoi_pdf).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert {(r.image_id, r.aoi_id) for r in got} == oracle
+
+
 @pytest.mark.parametrize(
     "res,n_salts,transport",
     [

@@ -39,15 +39,21 @@ def test_planner_matches_oracle(spark):
         "temporal_domain": ["2024-06-01", "2024-06-10_2024-06-20"],
         "resolution_m": 10.0,
     }
-    got = planner.plan_tiles(spark, req).toPandas()
+    plan = planner.plan_tiles(spark, req)
+    optimized = plan._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "Join", "LocalRelation"):
+        assert node not in optimized
+    got = plan.toPandas()
     exp = planner.plan_oracle(req)
     assert len(got) == len(exp)
-    gset = {
-        (r["aoi_idx"], r["tile_x"], r["tile_y"], str(r["date_start"]))
-        for _, r in got.iterrows()
-    }
-    eset = {(e["aoi_idx"], e["tile_x"], e["tile_y"], e["date_start"]) for e in exp}
-    assert gset == eset
+    rows = {(r.aoi_idx, r.tile_x, r.tile_y, str(r.date_start)): r for r in got.itertuples()}
+    assert set(rows) == {(e["aoi_idx"], e["tile_x"], e["tile_y"], e["date_start"]) for e in exp}
+    for e in exp:
+        r = rows[(e["aoi_idx"], e["tile_x"], e["tile_y"], e["date_start"])]
+        bbox = (r.tile_minx, r.tile_miny, r.tile_maxx, r.tile_maxy)
+        assert all(abs(g - w) <= 1e-9 for g, w in zip(bbox, e["bbox"]))
+        assert (r.tile_w_px, r.tile_h_px) == e["px"]
+        assert str(r.date_end) == e["date_end"]
     assert got["task_id"].is_unique
     # all tiles within pixel bounds
     assert (got["tile_w_px"] <= 2400).all() and (got["tile_h_px"] <= 2400).all()
