@@ -15,4 +15,13 @@ Everything is pure ``pyspark.sql`` + Arrow-vectorized UDFs — deployable with
 ``spark-submit --py-files`` (no JVM extensions, no Catalyst plugins).
 """
 
+from pyspark import SparkFiles as _SparkFiles
+
 __version__ = "0.1.0"
+
+# a worker imports this package when it unpickles an engine UDF: from then
+# on its tasks stop re-reading unchanged import archives (session.py)
+if _SparkFiles._is_running_on_worker:
+    from .session import gate_zip_rereads
+
+    gate_zip_rereads()

@@ -404,21 +404,28 @@ def ngram_jaccard_pairs(
             ids_sorted, ids_perm, index = s["ids_sorted"], s["ids_perm"], s["index"]
             mark = np.zeros(s["U"], dtype=bool)
 
+            def missing(ids):
+                return KeyError(
+                    f"ngram_jaccard_pairs: pair ids {list(ids)[:5]!r} are "
+                    "not in the shingled corpus — caller-supplied `pairs` "
+                    "must reference `docs` rows only"
+                )
+
             def lookup(id_pa):
                 vals = id_pa.to_numpy(zero_copy_only=False)
                 if index is not None:
-                    return np.fromiter(
-                        (index[x] for x in vals), dtype=np.int64, count=len(vals)
-                    )
+                    try:
+                        return np.fromiter(
+                            (index[x] for x in vals), dtype=np.int64, count=len(vals)
+                        )
+                    except KeyError:
+                        raise missing(x for x in vals if x not in index) from None
+                if len(ids_sorted) == 0:
+                    raise missing(vals)
                 pos = np.searchsorted(ids_sorted, vals)
                 pos = np.minimum(pos, len(ids_sorted) - 1)
                 if not (ids_sorted[pos] == vals).all():
-                    missing = np.asarray(vals)[ids_sorted[pos] != vals][:5]
-                    raise KeyError(
-                        f"ngram_jaccard_pairs: pair ids {list(missing)!r} are "
-                        "not in the shingled corpus — caller-supplied `pairs` "
-                        "must reference `docs` rows only"
-                    )
+                    raise missing(np.asarray(vals)[ids_sorted[pos] != vals])
                 return ids_perm[pos]
 
             def process(ia_pa, ib_pa):

@@ -200,11 +200,18 @@ WHERE bit_count(xor(sh_p, sh_c)) <= {max_hamming} ORDER BY probe_id, corpus_id
 """
 
 
+#: the sidecar's fields, declared so that reading it is one Spark job, not
+#: a schema-inference job and then the read
+META_SCHEMA = (
+    "bits int, bands int, max_hamming int, buckets int, "
+    "id_col string, hash_col string, id_type string"
+)
+
+
 def _meta_of(spark: SparkSession, path: str) -> dict:
-    row = spark.read.json(f"{path}/{META_DIR}").first()
+    row = spark.read.schema(META_SCHEMA).json(f"{path}/{META_DIR}").first()
     if row is None:
         raise ValueError(f"no hamming-index sidecar under {path}")
-    d = row.asDict()
     return {
         "bits": int(row["bits"]),
         "bands": int(row["bands"]),
@@ -214,7 +221,7 @@ def _meta_of(spark: SparkSession, path: str) -> dict:
         "hash_col": row["hash_col"],
         # pre-r6 sidecars carry no id_type; they were only ever written
         # with bigint ids, so that is the correct legacy default
-        "id_type": d.get("id_type") or "bigint",
+        "id_type": row["id_type"] or "bigint",
     }
 
 

@@ -372,6 +372,23 @@ def test_legacy_sidecar_without_id_type_defaults_bigint(spark, index_dir):
     spark.sql("DROP TABLE t_legacy")
 
 
+def test_sidecar_read_is_one_job(spark, index_dir):
+    """The sidecar's schema is declared: reading it runs the read alone,
+    with no schema-inference job before it, and keeps the field types."""
+    meta = {"bits": 62, "bands": 4, "max_hamming": 3, "buckets": 8,
+            "id_col": "image_id", "hash_col": "phash"}  # no id_type: pre-r6
+    spark.createDataFrame([meta]).coalesce(1).write.json(f"{index_dir}/{hamming_index.META_DIR}")
+    sc = spark.sparkContext
+    sc.setJobGroup("sidecar-read", "sidecar read")
+    try:
+        got = hamming_index._meta_of(spark, index_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("sidecar-read")) == 1
+    assert got == {**meta, "id_type": "bigint"}
+
+
 def test_compaction_preserves_probes_and_reduces_files(spark, index_dir):
     """N appends accumulate ~buckets files each; compaction must collapse
     them back to ~buckets files with IDENTICAL probe results."""

@@ -1,5 +1,6 @@
 """Pipeline checkpoints, resume, metrics, lineage (FIXTURES T7)."""
 
+import json
 import math
 import os
 
@@ -18,6 +19,18 @@ pytestmark = pytest.mark.filterwarnings("error::UserWarning")
 @pytest.fixture()
 def warehouse(tmp_path):
     return str(tmp_path / "wh")
+
+
+def _jobs_of(spark, group, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _stages(spark):
@@ -139,14 +152,8 @@ def test_stage_write_is_unwrapped_and_metrics_append_runs_no_job(spark, warehous
     p.run_stage(Stage("s", fn), None)
     assert written[0] is made[0]  # the store writes the stage's own plan
 
-    sc = spark.sparkContext
-    sc.setJobGroup("metrics-append", "metrics append")
-    try:
-        p._append_metrics("s", 1.0, {0: (10, 100)})
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup("metrics-append") == []
+    _, jobs = _jobs_of(spark, "metrics-append", lambda: p._append_metrics("s", 1.0, {0: (10, 100)}))
+    assert jobs == 0
 
 
 def test_stage_output_nan_is_committed_as_nan(spark, warehouse):
@@ -160,3 +167,38 @@ def test_stage_output_nan_is_committed_as_nan(spark, warehouse):
     assert got[0] == 0.0
     assert got[1] is not None and math.isnan(got[1])
     assert got[2] is None
+
+
+def test_read_back_declares_the_ledger_schema(spark, warehouse):
+    """Fresh or resumed, a parquet snapshot is read with the schema its
+    ledger entry recorded (no schema-inference job), and that schema is the
+    one Spark infers from the files. An entry without one still reads."""
+    _, stages = _stages(spark)
+    p = Pipeline(spark, warehouse, job_id="jobS")
+    read, declared = p._store.read, []
+    p._store.read = lambda stage, schema: declared.append(schema) or read(stage, schema)
+    cur = None
+    for st in stages:
+        cur = p.run_stage(st, cur)
+        assert cur.schema == spark.read.parquet(os.path.join(warehouse, "jobS", st.name)).schema
+    assert len(declared) == 3 and None not in declared
+
+    _, again = _stages(spark)
+    for st in again:
+        path = os.path.join(warehouse, "jobS", st.name)
+        df, jobs = _jobs_of(spark, f"resume-{st.name}", lambda: Pipeline(spark, warehouse, "jobS").run_stage(st, None))
+        assert jobs == 0
+        assert df.schema == spark.read.parquet(path).schema
+
+    # a ledger entry written before schemas were recorded
+    ledger = os.path.join(warehouse, "_ledger", "jobS__cells.json")
+    with open(ledger) as f:
+        entry = json.load(f)
+    del entry["schema"]
+    with open(ledger, "w") as f:
+        json.dump(entry, f)
+    path = os.path.join(warehouse, "jobS", "cells")
+    df, jobs = _jobs_of(spark, "legacy-entry", lambda: Pipeline(spark, warehouse, "jobS").run_stage(again[1], None))
+    assert jobs == 1  # Spark infers the schema
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, spark.read.parquet(path).collect()))

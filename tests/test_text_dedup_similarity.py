@@ -706,3 +706,26 @@ def test_jaccard_rejects_pair_ids_outside_corpus(spark):
     out = dedup.ngram_jaccard_pairs(docs, pairs=alien, threshold=0.0)
     with pytest.raises(Exception, match="not in the shingled corpus"):
         out.collect()
+
+
+def test_jaccard_rejects_pairs_over_an_empty_corpus(spark):
+    """An empty shingled corpus has no id to look up: the numeric path must
+    raise the contract message, not an IndexError from ``ids_sorted[-1]``."""
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    out = dedup.ngram_jaccard_pairs(docs, pairs=pairs, threshold=0.0, broadcast_sets=True)
+    with pytest.raises(Exception, match="not in the shingled corpus"):
+        out.collect()
+
+
+def test_jaccard_rejects_missing_string_pair_id(spark):
+    """String ids go through the dict lookup; a missing one must raise the
+    same contract message as the numeric path, not a bare KeyError."""
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"document number {i} with some text") for i in range(6)],
+        "doc_id string, text string",
+    )
+    alien = spark.createDataFrame([("d0", "zzz")], "id_a string, id_b string")
+    out = dedup.ngram_jaccard_pairs(docs, pairs=alien, threshold=0.0, broadcast_sets=True)
+    with pytest.raises(Exception, match="not in the shingled corpus"):
+        out.collect()
