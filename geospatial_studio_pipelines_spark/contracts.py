@@ -615,7 +615,8 @@ GROUP BY 1 HAVING count(*) > 1 ORDER BY fp
 
 def q_minhash_signatures(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", *dedup.minhash_signature(F.col("text"))).orderBy("doc_id")
+    mh = [f"mh{j}" for j in range(dedup.N_PERM)]
+    return dedup.shingle_sets_with_sigs(d).select("doc_id", *mh).orderBy("doc_id")
 
 
 def _minhash_sql_cols():
@@ -643,7 +644,7 @@ Q_SIMHASH_SQL = f"SELECT doc_id, {dedup.simhash_sql('text')} AS simhash FROM doc
 
 def q_simhash_near_dups(spark, sf_dir):
     """SimHash hamming near-dup pairs (Manku multi-index banding + popcount
-    verify — lossless at hamming ≤ bands-1, fully codegen)."""
+    verify — lossless at hamming ≤ bands-1; signatures from the Arrow UDF)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.simhash_near_dups(d, max_hamming=3).orderBy("id_a", "id_b")
 

@@ -161,7 +161,7 @@ def quality_score_sql(col: str) -> str:
 
 def fingerprint(text: Column) -> Column:
     """Full 128-bit document fingerprint = the md5 hex digest (md5 agrees
-    bit-for-bit across Spark/DuckDB; rolling-hash variant in dedup.shingles).
+    bit-for-bit across Spark/DuckDB; near-dup shingle hashing is in dedup).
 
     Deliberately NOT truncated: a 64-bit fingerprint at the 10^12-doc design
     scale expects ~C(n,2)/2^64 ≈ 2.7e4 birthday collisions, each one a unique
@@ -181,43 +181,11 @@ SHINGLE_K = 4
 _POW31 = [31**p for p in range(SHINGLE_K)]  # little-endian powers
 
 
-def shingle_hashes(text: Column) -> Column:
-    """array<long> of polynomial hashes of every k-char shingle:
-    h(i) = Σ_j ascii(substr(t, i+j, 1)) · 31^(k-1-j)  (< 2^24, no overflow).
-    Pure higher-order-function expression — JVM-side, and exactly
-    reproducible in DuckDB via list_transform (see ``shingle_hashes_sql``).
-
-    Evaluation shape: the text is split to a per-char code array ONCE and
-    bound as a lambda variable (single-element-array transform = let-binding),
-    then every shingle does k O(1) ``element_at`` lookups. The naive form —
-    ``substr`` per (shingle, j) — rescans the string per call: O(len²) per
-    document, which dominates the whole dedup pipeline on long documents.
-
-    Texts shorter than k hash to an EMPTY array: without the guard,
-    ``sequence(1, 0)`` yields a *descending* [1, 0] (Spark auto-steps -1)
-    and strict ``element_at`` then faults the whole job with
-    INVALID_ARRAY_INDEX_IN_ELEMENT_AT — and DuckDB's
-    ``generate_series(1, 0)`` is empty, so the guard is also what keeps
-    the two engines bit-identical."""
-    n = F.length(text)
-    idx = F.sequence(F.lit(1), n - (SHINGLE_K - 1))
-    codes = F.transform(F.split(text, ""), lambda c: F.ascii(c))
-    bound = F.transform(
-        F.array(codes),
-        lambda arr: F.transform(
-            idx,
-            lambda i: sum(
-                F.element_at(arr, i + F.lit(j)) * F.lit(_POW31[SHINGLE_K - 1 - j])
-                for j in range(SHINGLE_K)
-            ).cast("long"),
-        ),
-    )
-    return F.when(n >= SHINGLE_K, F.element_at(bound, 1)).otherwise(
-        F.array().cast("array<long>")
-    )
-
-
 def shingle_hashes_sql(col: str) -> str:
+    """DuckDB list<bigint> of the polynomial hash of every k-char shingle,
+    h(i) = Σ_j ascii(substr(t, i+j, 1)) · 31^(k-1-j) — the oracle twin of
+    the engine's Arrow hash (``operators.dedup._kgram_hashes``). Texts
+    shorter than k give an empty list: ``generate_series(1, 0)`` is empty."""
     terms = " + ".join(
         f"ascii(substr({col}, i + {j}, 1)) * {_POW31[SHINGLE_K - 1 - j]}" for j in range(SHINGLE_K)
     )

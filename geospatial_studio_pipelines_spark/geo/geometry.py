@@ -213,13 +213,6 @@ def polygon_intersects_boxes(rings: list[np.ndarray], boxes: np.ndarray) -> np.n
     return out
 
 
-def bbox_overlap(aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy):
-    """Vectorized boundary-inclusive bbox intersects — the 4-comparison prune
-    (mirrors the reference's ``gdf.clip(box(*bbox))`` pre-filter,
-    postprocess_generic_helper_functions.py:273)."""
-    return (aminx <= bmaxx) & (amaxx >= bminx) & (aminy <= bmaxy) & (amaxy >= bminy)
-
-
 # ------------------------------------------------------------- measurements
 
 

@@ -2,14 +2,15 @@
 SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
 Training-data-pipeline first-class ops (not in the reference, which processes
-unique imagery; mandated by the build brief). All relational / expression
-based — the shingle→minhash→band→bucket-join pipeline is classic
-Broder-style MinHash LSH expressed as DataFrame ops, so Catalyst handles
-pushdown and AQE handles the bucket-join skew.
+unique imagery; mandated by the build brief). Text signatures (MinHash,
+SimHash, the Jaccard shingle sets) all come from ONE vectorized k-gram hash
+(:func:`_kgram_hashes`) run in Arrow batches; banding, bucket joins and
+verification are relational — classic Broder-style MinHash LSH expressed as
+DataFrame ops, so Catalyst handles pushdown and AQE the bucket-join skew.
 
 Portability contract: every function here has deterministic semantics
 reproducible in DuckDB SQL (see ``__spark_entry__``) — hashes are polynomial
-ascii arithmetic (no engine-native ``hash()``), permutations use fixed
+code-point arithmetic (no engine-native ``hash()``), permutations use fixed
 constants, modulus stays in positive int64 range.
 """
 
@@ -17,10 +18,11 @@ from __future__ import annotations
 
 import itertools
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import _POW31, SHINGLE_K, shingle_hashes
+from ..functions.text import _POW31, SHINGLE_K
 
 # fixed MinHash permutation constants (a*h + b) % P  — P = 2^31 - 1 (prime)
 MINHASH_P = 2**31 - 1
@@ -45,82 +47,30 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def minhash_signature(text: Column, n_perm: int = N_PERM) -> list[Column]:
-    """n_perm MinHash values over the document's 4-char shingle set."""
-    return minhash_signature_from_shingles(shingle_hashes(text), n_perm)
-
-
-def minhash_signature_from_shingles(sh: Column, n_perm: int = N_PERM) -> list[Column]:
-    """n_perm MinHash values over a precomputed shingle-hash array column.
-    min over a permuted multiset equals min over its distinct set, so a
-    sorted/deduped array gives identical signatures — lets callers that
-    already materialized shingle sets (the jaccard-verify path) skip a
-    second shingling pass over the corpus."""
-
-    def _perm(j: int):
-        # NOTE: Spark introspects lambda arity — a default-arg capture
-        # (lambda h, j=j: ...) reads as 2 params and silently binds the
-        # element *index* to j. Closure factory keeps arity 1.
-        return lambda h: (F.lit(_A[j]) * h + F.lit(_B[j])) % F.lit(MINHASH_P)
-
-    return [F.array_min(F.transform(sh, _perm(j))).alias(f"mh{j}") for j in range(n_perm)]
-
-
-def minhash_bands(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_col: str | None = None,
-) -> DataFrame:
-    """(id, band_idx, band_key) rows: the LSH bucketing relation.
-
-    Single-pass: signature projection → explode over an inline band array.
-    (A per-band union would re-evaluate the shingle/minhash expression tree
-    once per band — 4× the scan CPU; explode fans out from one evaluation.)
-    ``shingle_col`` names a precomputed shingle-hash array column on
-    ``docs`` (signatures are identical — see
-    :func:`minhash_signature_from_shingles`); otherwise shingles are
-    derived from ``text_col``."""
-    # Docs shorter than SHINGLE_K hash to an empty shingle set → all-null
-    # signature. Drop them here: Spark's concat_ws skips nulls, so every
-    # null-signature doc would share the SAME ":"-only band key and all
-    # short docs would become mutual candidates (and a zero-union pair
-    # downstream). SQL engines agree for free — a NULL band key never
-    # equi-joins — so the filter is also what keeps the DuckDB twin
-    # bit-identical.
-    sig_cols = (
-        minhash_signature_from_shingles(F.col(shingle_col))
-        if shingle_col is not None
-        else minhash_signature(F.col(text_col))
-    )
-    sig = docs.select(F.col(id_col), *sig_cols).filter(F.col("mh0").isNotNull())
-    n_bands = N_PERM // BAND_SIZE
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[F.col(f"mh{b * BAND_SIZE + k}").cast("string") for k in range(BAND_SIZE)],
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
-        F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
+def _kgram_hashes(text: str | None) -> np.ndarray:
+    """int64 polynomial hash of every SHINGLE_K-code-point window of
+    ``text``, in text order (the shingle MULTISET):
+    h(i) = Σ_j cp(t[i+j]) · 31^(k-1-j). The engine's only shingle hash —
+    ``functions.text.shingle_hashes_sql`` is its DuckDB twin. The text
+    decodes to a code-point array through a utf-32 view (no per-char
+    Python) and the hash is k shifted vector multiplies. ``None`` and texts
+    shorter than SHINGLE_K have no shingles."""
+    if text is None or len(text) < SHINGLE_K:
+        return np.empty(0, dtype=np.int64)
+    c = np.frombuffer(text.encode("utf-32-le"), dtype="<u4").astype(np.int64)
+    n = c.size - SHINGLE_K + 1
+    h = c[:n] * _POW31[SHINGLE_K - 1]
+    for j in range(1, SHINGLE_K):
+        h += c[j : j + n] * _POW31[SHINGLE_K - 1 - j]
+    return h
 
 
 def _java_mod(a, p: int):
     """Java/Spark `%` (truncated-division remainder, sign of the dividend)
     on int64 numpy arrays — numpy's `%` floor-mods (sign of the divisor),
     which diverges exactly when `a` overflowed negative. Only reachable for
-    shingle hashes past 2^41 (astral-plane code points at corpus scale);
-    kept so the Arrow signature path is bit-identical to the Catalyst
-    expressions even there."""
-    import numpy as np
-
+    astral-plane code points; DuckDB raises on that overflow, so no oracle
+    covers these values."""
     r = a % p
     return np.where((a < 0) & (r != 0), r - p, r)
 
@@ -128,23 +78,16 @@ def _java_mod(a, p: int):
 def shingle_sets_with_sigs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, sh sorted-distinct array<long>, mh0..mh7) in ONE Arrow pass —
-    the vectorized twin of ``array_sort(array_distinct(shingle_hashes))`` +
-    ``minhash_signature_from_shingles``. Per batch the text decodes to a
-    code-point array (utf-32 view — no per-char Python), the k-gram
-    polynomial hash is four shifted vector multiplies, and the 8 permuted
-    minima are vector ops over the distinct set. Bit-identical to the
-    Catalyst expression tree (same int64 arithmetic incl. wraparound, same
-    truncated `%`; signatures over the distinct set equal signatures over
-    the multiset — min is order/multiplicity-free). Replaces an interpreted
-    higher-order-function tree that dominated the shingle stage CPU
-    (measured ~2x the whole-stage cost at sf0.1)."""
-    import numpy as np
-
+    """(id, sh sorted-distinct array<long>, mh0..mh7) in ONE Arrow pass over
+    :func:`_kgram_hashes`: the 8 permuted minima are vector ops over the
+    distinct set (min is order/multiplicity-free, so signatures over the
+    set equal signatures over the multiset). Docs without shingles get an
+    empty ``sh`` and NULL signatures. The DuckDB twins are
+    ``list_sort(list_distinct(shingle_hashes_sql))`` and
+    ``contracts.Q_MINHASH_SIGNATURES_SQL``."""
     id_type = dict(docs.dtypes)[id_col]
     mh_schema = ", ".join(f"mh{j} bigint" for j in range(N_PERM))
     out_schema = f"{id_col} {id_type}, sh array<bigint>, {mh_schema}"
-    pows = [_POW31[SHINGLE_K - 1 - j] for j in range(SHINGLE_K)]
     a_consts = np.array(_A, dtype=np.int64)
     b_consts = np.array(_B, dtype=np.int64)
 
@@ -155,26 +98,16 @@ def shingle_sets_with_sigs(
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
-                ids = rb.column(0)
-                texts = rb.column(1).to_pylist()
                 offsets = [0]
                 flat = []
                 sigs = np.empty((rb.num_rows, N_PERM), dtype=np.int64)
                 sig_valid = np.zeros(rb.num_rows, dtype=bool)
-                for i, t in enumerate(texts):
-                    if t is None or len(t) < SHINGLE_K:
-                        offsets.append(offsets[-1])
-                        continue
-                    c = np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(
-                        np.int64
-                    )
-                    h = c[: 1 - SHINGLE_K] * pows[0]
-                    for j in range(1, SHINGLE_K - 1):
-                        h = h + c[j : j + 1 - SHINGLE_K] * pows[j]
-                    h = h + c[SHINGLE_K - 1 :] * pows[SHINGLE_K - 1]
-                    dh = np.unique(h)
-                    flat.append(dh)
+                for i, t in enumerate(rb.column(1).to_pylist()):
+                    dh = np.unique(_kgram_hashes(t))
                     offsets.append(offsets[-1] + dh.size)
+                    if dh.size == 0:
+                        continue
+                    flat.append(dh)
                     perm = _java_mod(
                         dh[:, None] * a_consts[None, :] + b_consts[None, :],
                         MINHASH_P,
@@ -187,7 +120,7 @@ def shingle_sets_with_sigs(
                 sh_arr = pa.ListArray.from_arrays(
                     pa.array(offsets, type=pa.int32()), pa.array(values)
                 )
-                cols = [ids, sh_arr] + [
+                cols = [rb.column(0), sh_arr] + [
                     pa.array(
                         np.where(sig_valid, sigs[:, j], 0), mask=~sig_valid
                     )
@@ -201,16 +134,19 @@ def shingle_sets_with_sigs(
 
 
 def minhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_col: str | None = None,
-    sigs_present: bool = False,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct unordered candidate pairs sharing ≥1 LSH band bucket.
-    The band self-join is the shuffle; a hot bucket (boilerplate text) is a
-    skew risk — bound it by ``spark.sql.adaptive.skewJoin`` plus the
-    downstream exact-jaccard verify which is per-pair work.
+    """Distinct unordered candidate pairs sharing ≥1 LSH band bucket: the
+    :func:`shingle_sets_with_sigs` pass, then :func:`_band_pairs`."""
+    return _band_pairs(shingle_sets_with_sigs(docs, id_col, text_col), id_col)
+
+
+def _band_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
+    """(id_a < id_b) pairs of rows of ``sigs`` (mh0..mh7 columns) that
+    share ≥1 band bucket. The band self-join is the shuffle; a hot bucket
+    (boilerplate text) is a skew risk — bound it by
+    ``spark.sql.adaptive.skewJoin`` plus the downstream exact-jaccard
+    verify which is per-pair work.
 
     Pair-level dedup is the canonical-band filter (same device as
     ``hamming_near_dups``): whether a pair collides in band b is a pure
@@ -224,19 +160,13 @@ def minhash_candidate_pairs(
     boilerplate buckets) is the LARGER relation — and duplicate
     candidates never reach the expensive jaccard-verify stage twice.
     Band keys join as the raw int components (no concat_ws string build).
-    ``sigs_present`` says ``docs`` already carries the mh0..mh7 signature
-    columns (``shingle_sets_with_sigs``) — no signature expression is built
-    at all then."""
-    if sigs_present:
-        sig_cols = [F.col(f"mh{j}") for j in range(N_PERM)]
-    else:
-        sig_cols = (
-            minhash_signature_from_shingles(F.col(shingle_col))
-            if shingle_col is not None
-            else minhash_signature(F.col(text_col))
-        )
+
+    Docs without shingles have NULL signatures and are dropped: they
+    would otherwise all share one band key and become mutual candidates.
+    SQL engines agree for free — a NULL band key never equi-joins."""
+    mh = [f"mh{j}" for j in range(N_PERM)]
     n_bands = N_PERM // BAND_SIZE
-    sig = docs.select(F.col(id_col), *sig_cols).filter(F.col("mh0").isNotNull())
+    sig = sigs.select(id_col, *mh).filter(F.col("mh0").isNotNull())
     band_structs = F.array(
         *[
             F.struct(
@@ -251,7 +181,7 @@ def minhash_candidate_pairs(
     )
     banded = sig.select(
         F.col(id_col),
-        F.array(*[F.col(f"mh{j}") for j in range(N_PERM)]).alias("sig"),
+        F.array(*mh).alias("sig"),
         F.explode(band_structs).alias("bk"),
     ).select(
         id_col, "sig", "bk.band", *[f"bk.k{k}" for k in range(BAND_SIZE)]
@@ -307,27 +237,18 @@ def ngram_jaccard_pairs(
         est = 8 * (docs.agg(F.sum(F.length(text_col))).first()[0] or 0)
         broadcast_sets = est <= SETS_BROADCAST_MAX_BYTES
     own_pairs = pairs is None
-    if broadcast_sets:
-        # Shingle the corpus ONCE, in one vectorized Arrow pass that also
-        # emits the 8 minhash values (shingle_sets_with_sigs — replaces the
-        # interpreted HOF tree): persist the relation, band off the flat
-        # mh columns, collect the sets for the broadcast kernel, then
-        # eagerly checkpoint the (small) pair list so the cache can be
-        # released before returning the lazy result.
-        sets_df = shingle_sets_with_sigs(docs, id_col, text_col)
-    else:
-        sets_df = docs.select(
-            F.col(id_col),
-            F.array_sort(F.array_distinct(shingle_hashes(F.col(text_col)))).alias("sh"),
-        ).withColumn("n", F.size("sh"))
-    if own_pairs and broadcast_sets:
+    # One vectorized Arrow pass gives both the sets and the 8 minhash values
+    # that the candidates band off. On the kernel path it runs ONCE: the
+    # relation is persisted, its sets collected for the broadcast kernel,
+    # and the (small) pair list eagerly checkpointed so the cache can be
+    # released before returning the lazy result.
+    sets_df = shingle_sets_with_sigs(docs, id_col, text_col)
+    if not broadcast_sets:
+        sets_df = sets_df.withColumn("n", F.size("sh"))
+    elif own_pairs:
         sets_df = sets_df.persist()
     if pairs is None:
-        pairs = (
-            minhash_candidate_pairs(sets_df, id_col, text_col, sigs_present=True)
-            if broadcast_sets
-            else minhash_candidate_pairs(docs, id_col, text_col)
-        )
+        pairs = _band_pairs(sets_df, id_col)
     if broadcast_sets:
         # kernel path: ship the per-doc sorted shingle sets ONCE per worker
         # as a broadcast CSR and stream only (id_a, id_b) pairs through a
@@ -336,8 +257,6 @@ def ngram_jaccard_pairs(
         # 2.5M pairs for a 12 MB relation) and evaluates array_intersect
         # interpreted; measured 2.5× slower than even the r6 searchsorted
         # kernel this replaces.
-        import numpy as np
-
         # CSR layout: one flat values array + offsets. r7: values are
         # REMAPPED to dense ids 0..U-1 (np.unique) so the kernel can count
         # intersections with a U-byte mark table — O(|B|) lookups per pair
@@ -508,23 +427,29 @@ SIMHASH_BITS = 32
 _SPREAD = 2654435761  # Knuth multiplicative spread of the 24-bit poly hash
 
 
+def _simhash_batch(texts):
+    """Scalar Arrow UDF body: one 32-bit SimHash per text. Bit b is set iff
+    Σ (2·bit_b(spread(h)) − 1) > 0 over the text's shingle MULTISET, where
+    spread(h) = h · _SPREAD mod 2^32. No shingles (``None``, short text)
+    gives 0, as in ``simhash_sql``."""
+    import pyarrow as pa
+
+    bits = np.arange(SIMHASH_BITS, dtype=np.int64)
+    out = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts.to_pylist()):
+        s = (_kgram_hashes(t) * _SPREAD) % 2**32
+        votes = (((s[:, None] >> bits) & 1) * 2 - 1).sum(axis=0)
+        out[i] = ((votes > 0).astype(np.int64) << bits).sum()
+    return pa.array(out)
+
+
 def simhash(text: Column) -> Column:
-    """32-bit SimHash over shingle hashes: bit b set iff Σ_shingles
-    (2·bit_b(spread(h)) − 1) > 0. Pure expressions (aggregate over the
-    shingle array per bit)."""
-    sh = shingle_hashes(text)
-    spread = F.transform(sh, lambda h: (h * F.lit(_SPREAD)) % F.lit(2**32))
-
-    def _vote(b: int):
-        return lambda acc, h: acc + F.when(
-            (F.floor(h / F.lit(2**b)).cast("long") % 2) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    out = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        vote = F.aggregate(spread, F.lit(0).cast("long"), _vote(b))
-        out = out + F.when(vote > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
+    """32-bit SimHash over the shingle hashes of ``text`` (bigint column):
+    a scalar Arrow UDF over :func:`_kgram_hashes`, built per call so that
+    importing this module does no work. The UDF never returns NULL; the
+    coalesce tells the optimizer so, else a join on the signature infers an
+    ``isnotnull`` filter that runs the UDF a second time below it."""
+    return F.coalesce(F.arrow_udf(_simhash_batch, "bigint")(text), F.lit(0).cast("long"))
 
 
 def simhash_sql(col: str) -> str:
@@ -997,7 +922,7 @@ def simhash_near_dups(
     text_col: str = "text",
 ) -> DataFrame:
     """SimHash hamming near-duplicate pairs → (id_a, id_b, hamming ≤
-    max_hamming): the ``simhash`` signature expressions feeding
+    max_hamming): the ``simhash`` signatures feeding
     ``hamming_near_dups`` at the 32-bit/4-band geometry. Docs shorter than
     the shingle width all hash to signature 0 and pair with each other at
     hamming 0 — the documented contract of ``simhash`` (mirrored by the
@@ -1047,21 +972,9 @@ WHERE bit_count(xor(sha, shb)) <= {max_hamming} ORDER BY id_a, id_b
 
 
 def simhash_near_dups_sql(max_hamming: int = SIMHASH_NEAR_BANDS - 1, base: str = "documents") -> str:
-    """DuckDB twin of ``simhash_near_dups`` (same signature expressions,
-    same banding, same popcount verify)."""
-    width = SIMHASH_BITS // SIMHASH_NEAR_BANDS
-    mask = (1 << width) - 1
-    bs = ", ".join(str(b) for b in range(SIMHASH_NEAR_BANDS))
-    return f"""
-WITH sig AS (
-  SELECT doc_id, {simhash_sql('text')} AS sh FROM {base}
-), bands AS (
-  SELECT doc_id, sh, t.b AS band, (sh >> (t.b * {width})) & {mask} AS key
-  FROM sig, UNNEST([{bs}]) AS t(b)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, a.sh AS sha, b.doc_id AS id_b, b.sh AS shb
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, bit_count(xor(sha, shb)) AS hamming FROM cand
-WHERE bit_count(xor(sha, shb)) <= {max_hamming} ORDER BY id_a, id_b
-"""
+    """DuckDB twin of ``simhash_near_dups``: ``simhash_sql`` signatures
+    through ``hamming_near_dups_sql`` at the same geometry."""
+    return hamming_near_dups_sql(
+        f"SELECT doc_id, {simhash_sql('text')} AS sh FROM {base}",
+        bits=SIMHASH_BITS, bands=SIMHASH_NEAR_BANDS, max_hamming=max_hamming,
+    )

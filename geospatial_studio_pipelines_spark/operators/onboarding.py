@@ -42,11 +42,6 @@ def size_consistency(images: DataFrame, top_outliers: int = 10) -> tuple[DataFra
     return hist.orderBy("w", "h"), outliers
 
 
-def total_size_bytes(df: DataFrame, bytes_col: str = "bytes") -> int:
-    """A9 dataset total size: Σ length(bytes)."""
-    return df.agg(F.sum(F.length(F.col(bytes_col))).alias("s")).collect()[0]["s"]
-
-
 def train_test_val_split(
     df: DataFrame, weights=(0.6, 0.2, 0.2), seed: int = 0
 ) -> dict[str, DataFrame]:

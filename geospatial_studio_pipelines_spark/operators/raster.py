@@ -123,10 +123,6 @@ def impute_nans_array(arr: np.ndarray, max_fill_dist: int = 16) -> np.ndarray:
     return out
 
 
-def impute_nans(df: DataFrame, in_col: str = "bytes", out_col: str = "imputed_bytes") -> DataFrame:
-    return _map_images(df, lambda a, _r: impute_nans_array(a), in_col, out_col)
-
-
 # --------------------------------------- F7/F8: resize / crop to window
 
 

@@ -18,7 +18,6 @@ the ad-hoc planner grid with hex cell ids (res 5–12 by footprint extent).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -79,16 +78,15 @@ def explode_cover_cells_expr(
     df: DataFrame, res: int, bbox_cols=("minx", "miny", "maxx", "maxy")
 ) -> DataFrame:
     """Pure-expression covering-cell explode: one row per (row, hex cell that
-    truly overlaps the bbox) at ``res`` — the codegen twin of
-    ``explode_cover_cells``.
+    truly overlaps the bbox) at ``res``.
 
     Variable fan-out IS expressible in Catalyst: two chained
     ``explode(sequence(lo, hi))`` generators enumerate the axial (q, r)
     range of the padded bbox, then an exact hex-vs-AABB separating-axis test
     (4 axes: x, y, and the two slanted hex edge normals) keeps only truly
     overlapping cells. Everything stays inside WholeStageCodegen — no Arrow
-    round-trip, unlike the pandas version — and the tight SAT cover emits
-    ~35%% fewer candidate rows than the centre-within-circumradius superset.
+    round-trip — and the tight SAT cover emits ~35%% fewer candidate rows
+    than a centre-within-circumradius superset.
 
     Correctness contract (relied on by ``partitioned_spatial_join``'s
     reference-point dedup): the emitted set is a superset of every hex that
@@ -168,65 +166,6 @@ def cover_cell_qr(minx, miny, maxx, maxy, res: int):
         & (np.abs(sqrt3 / 2.0 * dy - dx * 0.5) <= slant)
     )
     return q[keep].astype(np.int64), r[keep].astype(np.int64)
-
-
-def explode_cover_cells(df: DataFrame, res: int, bbox_cols=("minx", "miny", "maxx", "maxy")) -> DataFrame:
-    """One row per (row, covering cell): covers each bbox with all hex cells
-    it may overlap at ``res`` — the same superset-safe cell set as
-    ``hexgrid.bbox_to_cells``, but enumerated for the WHOLE Arrow batch in
-    one numpy pass (repeat/arange over per-row axial ranges) instead of a
-    Python call per row. Variable-length fan-out can't be a closed-form
-    Catalyst expression; this is the next-best shape: one ``mapInPandas``
-    stage whose cost is the output row count, not the input row count."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(df.schema.fields + [StructField("cell_id", LongType())])
-    cminx, cminy, cmaxx, cmaxy = bbox_cols
-    size = float(hexgrid.cell_size(res))
-    pad = size * 1.001
-    sqrt3 = float(np.sqrt(3.0))
-
-    def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            minx = pdf[cminx].to_numpy(dtype=np.float64) - pad
-            miny = pdf[cminy].to_numpy(dtype=np.float64) - pad
-            maxx = pdf[cmaxx].to_numpy(dtype=np.float64) + pad
-            maxy = pdf[cmaxy].to_numpy(dtype=np.float64) + pad
-            # q is increasing in lng, decreasing in lat; r increasing in lat
-            qmin = (sqrt3 / 3.0 * minx - maxy / 3.0) / size
-            qmax = (sqrt3 / 3.0 * maxx - miny / 3.0) / size
-            rmin = (2.0 / 3.0 * miny) / size
-            rmax = (2.0 / 3.0 * maxy) / size
-            q0 = np.floor(qmin).astype(np.int64) - 1
-            q1 = np.ceil(qmax).astype(np.int64) + 1
-            r0 = np.floor(rmin).astype(np.int64) - 1
-            r1 = np.ceil(rmax).astype(np.int64) + 1
-            nr = r1 - r0 + 1
-            counts = (q1 - q0 + 1) * nr
-            total = int(counts.sum())
-            row = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
-            starts = np.zeros(len(pdf), dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            t = np.arange(total, dtype=np.int64) - starts[row]
-            q = q0[row] + t // nr[row]
-            r = r0[row] + t % nr[row]
-            # keep cells whose center is within one circumradius of the bbox
-            clng = size * sqrt3 * (q + r / 2.0)
-            clat = size * 1.5 * r
-            keep = (
-                (clng >= minx[row]) & (clng <= maxx[row])
-                & (clat >= miny[row]) & (clat <= maxy[row])
-            )
-            row, q, r = row[keep], q[keep], r[keep]
-            out = pdf.iloc[row].reset_index(drop=True)
-            out["cell_id"] = hexgrid._pack(
-                np.full(len(q), res, dtype=np.int64), q, r
-            )
-            yield out
-
-    return df.mapInPandas(cover, out_schema)
 
 
 # ------------------------------------------------- planner-grid tiling (W1)

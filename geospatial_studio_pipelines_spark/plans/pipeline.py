@@ -285,7 +285,9 @@ class Pipeline:
     # ----------------------------------------------------------- tables
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.warehouse, "metrics"))
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(
+            os.path.join(self.warehouse, "metrics")
+        )
 
     def checkpoints(self) -> DataFrame:
         entries = []

@@ -253,9 +253,3 @@ def _parallelism_of(master: str) -> int:
             return os.cpu_count() or 8
         return int(inner)
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
-
-
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

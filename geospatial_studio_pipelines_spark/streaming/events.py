@@ -130,51 +130,3 @@ def tile_join_stream(
     )
     fp = footprints.with_footprint(stream)
     return spatial_join.broadcast_spatial_join(fp, aoi_pdf)
-
-
-def sessionize_with_state(
-    events: DataFrame, gap_s: int = 3600, timeout_s: int = 7200
-) -> DataFrame:
-    """Gap-based sessionization via applyInPandasWithState: custom stateful
-    operator (the engine's UDF-extension point for streaming, §2.10 analog).
-
-    Emits one row per closed session: (user_id, session_start, session_end,
-    n_events). State per user: (start, last_ts, count).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, session_start timestamp, session_end timestamp, n_events long"
-    state_schema = "start long, last long, n long"
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        rows = []
-        if state.hasTimedOut:
-            start, last, n = state.get
-            rows.append((user_id, pd.Timestamp(start, unit="s"), pd.Timestamp(last, unit="s"), n))
-            state.remove()
-        else:
-            ts = []
-            for pdf in pdfs:
-                ts.extend(int(t.timestamp()) for t in pdf["ts"])
-            ts.sort()
-            if not ts:
-                return iter([pd.DataFrame(rows, columns=["user_id", "session_start", "session_end", "n_events"])])
-            if state.exists:
-                start, last, n = state.get
-            else:
-                start, last, n = ts[0], ts[0], 0
-            for t in ts:
-                if t - last > gap_s:
-                    rows.append((user_id, pd.Timestamp(start, unit="s"), pd.Timestamp(last, unit="s"), n))
-                    start, n = t, 0
-                last = t
-                n += 1
-            state.update((start, last, n))
-            state.setTimeoutDuration(timeout_s * 1000)
-        return iter([pd.DataFrame(rows, columns=["user_id", "session_start", "session_end", "n_events"])])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.ProcessingTimeTimeout
-    )

@@ -125,7 +125,9 @@ def test_grid_tiles_vs_oracle(spark):
 
 def test_explode_cover_cells_superset(spark, images_fp):
     res = 5
-    got = tiling.explode_cover_cells(images_fp.select("image_id", "minx", "miny", "maxx", "maxy"), res).toPandas()
+    got = tiling.explode_cover_cells_expr(
+        images_fp.select("image_id", "minx", "miny", "maxx", "maxy"), res
+    ).toPandas()
     pdf = _oracle_fp(200)
     # each image's center cell must be among its covering cells
     centers = hg.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), res)

@@ -75,6 +75,18 @@ def test_pipeline_runs_and_writes_tables(spark, warehouse):
         assert rows["bytes"].sum() == sum(os.path.getsize(os.path.join(d, f)) for f in parts)
 
 
+def test_metrics_read_declares_its_schema(spark, warehouse):
+    """metrics() reads with METRICS_SCHEMA declared, so building it starts
+    no schema-inference job."""
+    _, stages = _stages(spark)
+    p = Pipeline(spark, warehouse, job_id="jobM")
+    p.run(stages[:1])
+    metrics, jobs = _jobs_of(spark, "metrics-read", p.metrics)
+    assert jobs == 0
+    assert metrics.schema == StructType.fromDDL(METRICS_SCHEMA)
+    assert metrics.filter(metrics.stage == "footprints").count() > 0
+
+
 def test_pipeline_resume_skips_committed_and_is_byte_identical(spark, warehouse):
     calls, stages = _stages(spark)
     p = Pipeline(spark, warehouse, job_id="jobR")

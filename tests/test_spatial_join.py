@@ -172,6 +172,9 @@ def test_cover_cell_expr_matches_numpy_twin(spark):
             q, rr = tiling.cover_cell_qr(minx, miny, maxx, maxy, res)
             exp = set(hexgrid._pack(np.full(q.size, res, dtype=np.int64), q, rr).tolist())
             assert got.get(i, set()) == exp, (res, i)
+            # the bbox's centre cell is always among its covering cells
+            centre = hexgrid.latlng_to_cell((miny + maxy) / 2, (minx + maxx) / 2, res)
+            assert int(centre) in exp, (res, i)
 
 
 def test_partitioned_join_hot_cell_skew(spark):

@@ -50,17 +50,44 @@ def test_text_fn_matches_duckdb(docs, duck, expr_fn, sql_fn):
     _compare([(r.doc_id, r.v) for r in got], exp)
 
 
+#: short docs (< k chars), empty and NULL text, multi-byte code points,
+#: repeated shingles
+TRICKY_DOCS = [
+    (0, "abcdefg"),
+    (1, "abc"),          # shorter than the shingle width -> empty set
+    (2, ""),
+    (3, "aaaaaaaaaa"),   # one distinct shingle, repeated
+    (4, "héllo wörld"),  # multi-byte code points
+    (5, "the quick brown fox jumps over the lazy dog"),
+    (6, "日本語のテキスト断片"),
+    (7, None),
+    (8, "abcd"),
+    (9, "abab abab abab x"),  # repeated shingles with a minority vote
+]
+
+
+@pytest.fixture(scope="module")
+def tricky(spark):
+    """(Spark DataFrame, DuckDB connection with a ``documents`` table) over
+    TRICKY_DOCS."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", TRICKY_DOCS)
+    return spark.createDataFrame(TRICKY_DOCS, "doc_id long, text string"), con
+
+
+def _duck_sets(con):
+    """doc_id → the sorted distinct shingle set, from the DuckDB twin."""
+    q = f"SELECT doc_id, list_sort(list_distinct({T.shingle_hashes_sql('text')})) FROM documents"
+    return dict(con.execute(q).fetchall())
+
+
 def test_shingle_hashes_match_duckdb(docs, duck):
-    got = docs.select("doc_id", T.shingle_hashes(F.col("text")).alias("sh")).collect()
-    exp = duck.execute(
-        f"SELECT doc_id, {T.shingle_hashes_sql('text')} AS sh FROM documents"
-    ).fetchall()
-    g = {r.doc_id: r.sh for r in got}
-    e = {r[0]: r[1] for r in exp}
-    assert g == e
+    got = dedup.shingle_sets_with_sigs(docs).select("doc_id", "sh").collect()
+    assert {r.doc_id: r.sh for r in got} == _duck_sets(duck)
 
 
-def test_simhash_matches_duckdb(docs, duck):
+def test_simhash_matches_duckdb(docs, duck, tricky):
     sub = docs.limit(30)
     got = sub.select("doc_id", dedup.simhash(F.col("text")).alias("sh")).collect()
     ids = tuple(r.doc_id for r in got)
@@ -68,6 +95,11 @@ def test_simhash_matches_duckdb(docs, duck):
         f"SELECT doc_id, {dedup.simhash_sql('text')} AS sh FROM documents WHERE doc_id IN {ids}"
     ).fetchall()
     _compare([(r.doc_id, r.sh) for r in got], exp)
+    df, con = tricky
+    got = df.select("doc_id", dedup.simhash(F.col("text")).alias("sh")).collect()
+    exp = con.execute(f"SELECT doc_id, {dedup.simhash_sql('text')} FROM documents").fetchall()
+    _compare([(r.doc_id, r.sh) for r in got], exp)
+    assert dict(exp)[7] == 0  # NULL text
 
 
 def test_exact_duplicates(spark):
@@ -189,18 +221,17 @@ def test_embedding_near_dups_threshold(spark):
 
 
 def test_shingle_hashes_short_texts(spark, duck):
-    """Texts shorter than SHINGLE_K must hash to an empty array, not fault
-    the job (sequence(1,0) is DESCENDING in Spark; strict element_at threw
-    INVALID_ARRAY_INDEX_IN_ELEMENT_AT before the guard)."""
+    """Texts shorter than SHINGLE_K have no shingles (empty set, NULL
+    signature) on the Arrow path and in the DuckDB twin alike."""
     rows = [(0, ""), (1, "ab"), (2, "abc"), (3, "abcd"), (4, "abcde")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.sh for r in df.select("doc_id", T.shingle_hashes(F.col("text")).alias("sh")).collect()}
-    assert got[0] == [] and got[1] == [] and got[2] == []
-    assert len(got[3]) == 1 and len(got[4]) == 2
-    # DuckDB twin agrees on the empty-list semantics
-    for txt in ("", "ab", "abc"):
+    got = {r.doc_id: r for r in dedup.shingle_sets_with_sigs(df).collect()}
+    assert got[0].sh == [] and got[1].sh == [] and got[2].sh == []
+    assert got[2].mh0 is None and got[3].mh0 is not None
+    assert len(got[3].sh) == 1 and len(got[4].sh) == 2
+    for i, txt in rows:
         exp = duck.execute(f"SELECT {T.shingle_hashes_sql(repr(txt))}").fetchone()[0]
-        assert exp == []
+        assert got[i].sh == sorted(set(exp))
 
 
 def test_ngram_jaccard_shuffled_join_matches_broadcast(docs):
@@ -655,29 +686,37 @@ def test_documents_df_planted_dups_found(spark):
     assert rows == planted
 
 
-def test_shingle_sets_with_sigs_matches_expressions(spark):
+def test_shingle_sets_with_sigs_matches_expressions(tricky):
     """The vectorized Arrow shingle/minhash pass must be bit-identical to
-    the Catalyst expression tree on tricky inputs: short docs (< k chars),
-    empty text, multi-byte code points, repeated shingles."""
-    from geospatial_studio_pipelines_spark.functions.text import shingle_hashes
+    the DuckDB expressions on tricky inputs."""
+    from geospatial_studio_pipelines_spark.contracts import Q_MINHASH_SIGNATURES_SQL
 
-    pdf = [
-        (0, "abcdefg"),
-        (1, "abc"),          # shorter than the shingle width -> empty set
-        (2, ""),
-        (3, "aaaaaaaaaa"),   # one distinct shingle, repeated
-        (4, "héllo wörld"),  # multi-byte code points
-        (5, "the quick brown fox jumps over the lazy dog"),
-        (6, "日本語のテキスト断片"),
-    ]
-    df = spark.createDataFrame(pdf, "doc_id long, text string")
-    want = df.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(shingle_hashes(F.col("text")))).alias("sh"),
-        *dedup.minhash_signature(F.col("text")),
-    ).orderBy("doc_id").collect()
+    df, con = tricky
+    sets = _duck_sets(con)
+    want = [(i, sets[i], *mh) for i, *mh in con.execute(Q_MINHASH_SIGNATURES_SQL).fetchall()]
     got = dedup.shingle_sets_with_sigs(df).orderBy("doc_id").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [tuple(r) for r in got] == want
+
+
+def test_text_dedup_plans_have_no_lambda(spark, docs):
+    """Every text signature comes from the Arrow shingle pass: no
+    higher-order-function (lambda) expression is left in a dedup plan."""
+    from geospatial_studio_pipelines_spark import contracts
+
+    sub = docs.filter(F.col("doc_id") < 40).select("doc_id", "text")
+    frames = {
+        "minhash_candidate_pairs": dedup.minhash_candidate_pairs(sub),
+        "ngram_jaccard_pairs broadcast": dedup.ngram_jaccard_pairs(sub, broadcast_sets=True),
+        "ngram_jaccard_pairs shuffled": dedup.ngram_jaccard_pairs(sub, broadcast_sets=False),
+        "simhash_near_dups": dedup.simhash_near_dups(sub),
+        "q_minhash_signatures": contracts.q_minhash_signatures(spark, SF_DIR),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan, name
+        if name == "simhash_near_dups":
+            # one SimHash UDF evaluation per join side, none under a filter
+            assert plan.count("ArrowEvalPython") == 2, plan
 
 
 def test_cosine_kernel_rejects_zero_norm_vectors(spark):
