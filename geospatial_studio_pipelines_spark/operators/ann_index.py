@@ -124,49 +124,45 @@ def compact_ivf_index(spark: SparkSession, path: str) -> dict:
     hpath = jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
-    def _list_dirs():
-        return [
-            st.getPath() for st in fs.listStatus(hpath(path))
-            if st.isDirectory() and st.getPath().getName().startswith("list=")
-        ]
-
     def _part_files(d):
         return [
             st.getPath() for st in fs.listStatus(d)
             if st.isFile() and st.getPath().getName().startswith("part-")
         ]
 
-    before = {str(d): _part_files(d) for d in _list_dirs()}
     staging = path.rstrip("/") + "__compacting"
     fs.delete(hpath(staging), True)
-    df = spark.read.parquet(path)
-    rows = df.count()
+    # the read lists the directory once; its file index, grouped by list=
+    # dir, is the list of files to delete, so a vector appended while
+    # compaction runs is either rewritten or left in place, never both
+    src = spark.read.parquet(path)
+    before = {}
+    for f in src.inputFiles():
+        fp = hpath(jvm.java.net.URI(f))
+        before.setdefault(fp.getParent().getName(), []).append(fp)
+    rows = src.count()
     # one output file per list: repartition on the partition column so each
     # task owns whole lists (the write splits them back into list= dirs)
-    df.repartition(meta["nlist"], "list").write.partitionBy("list").mode(
+    src.repartition(meta["nlist"], "list").write.partitionBy("list").mode(
         "overwrite"
     ).parquet(staging)
-    n_before = sum(len(v) for v in before.values())
-    n_after = 0
-    for d in _list_dirs():
+    for st in fs.listStatus(hpath(staging)):
+        d = st.getPath()
         name = d.getName()
-        staged = hpath(staging + "/" + name)
-        if not fs.exists(staged):
-            # no staged counterpart (empty after the compaction read, or a
-            # list= dir created by a concurrent append since the snapshot):
-            # retained old files stay live, so count them in files_after
-            n_after += len(_part_files(d))
+        if not (st.isDirectory() and name.startswith("list=")):
             continue
-        # .get(): the dir may postdate the `before` snapshot (concurrent
-        # append) — treat it as having no old files rather than KeyError
-        for f in before.get(str(d), []):
+        for f in before[name]:
             fs.delete(f, False)
-        for f in _part_files(staged):
-            dest = hpath(str(d) + "/" + f.getName())
+        for f in _part_files(d):
+            dest = hpath(path + "/" + name + "/" + f.getName())
             if not fs.rename(f, dest):
                 raise IOError(f"IVF compaction swap failed: {f} -> {dest}")
-            n_after += 1
     fs.delete(hpath(staging), True)
+    n_after = sum(
+        len(_part_files(st.getPath())) for st in fs.listStatus(hpath(path))
+        if st.isDirectory() and st.getPath().getName().startswith("list=")
+    )
+    n_before = sum(len(v) for v in before.values())
     return {"files_before": n_before, "files_after": n_after, "rows": rows}
 
 

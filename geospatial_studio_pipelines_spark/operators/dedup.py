@@ -653,6 +653,17 @@ def _hamming_block_layout(bits: int, blocks: int) -> list[tuple[int, int]]:
     return layout
 
 
+def _hamming_geometry(
+    bits: int, bands: int, max_hamming: int
+) -> tuple[list[tuple[int, int]], list[tuple[int, ...]]]:
+    """``(layout, subsets)`` of the Manku index: the (offset, width) of each
+    of the ``bands`` blocks, and the (bands - max_hamming)-subset of blocks
+    that keys each table. Checks the pigeonhole bound first."""
+    _check_pigeonhole(max_hamming, bands)
+    subsets = list(itertools.combinations(range(bands), bands - max_hamming))
+    return _hamming_block_layout(bits, bands), subsets
+
+
 def choose_hamming_blocks(
     n_rows: int,
     bits: int,
@@ -749,9 +760,7 @@ def banded_signatures(
     and the hot-bucket guard are documented on :func:`hamming_near_dups`."""
     if max_hamming is None:
         max_hamming = bands - 1
-    _check_pigeonhole(max_hamming, bands)
-    layout = _hamming_block_layout(bits, bands)
-    subsets = list(itertools.combinations(range(bands), bands - max_hamming))
+    layout, subsets = _hamming_geometry(bits, bands, max_hamming)
     sig = df.select(F.col(id_col), F.col(hash_col).alias("sh"))
     banded = sig.select(
         id_col,
@@ -818,8 +827,9 @@ def hamming_near_dups(
     signatures, image perceptual hashes — the north-rule image table
     carries ``phash:int64`` exactly for this) → (id_a, id_b, hamming).
     Fully codegen: band keys = shift/mask, candidates = ONE shuffle
-    (equi-join on (band, key)), verification = ``bit_count(xor)`` — no
-    Python anywhere.
+    (the input is banded once and that frame equi-joins itself on
+    (band, key), so AQE runs the exchange once and reuses it for the other
+    side), verification = ``bit_count(xor)`` — no Python anywhere.
 
     ``bands`` is the Manku block count m: the hash splits into m blocks
     and ONE table is built per (m - max_hamming)-subset of blocks, keyed
@@ -848,17 +858,18 @@ def hamming_near_dups(
     pairs at 4e6 rows and killed the JVM). Pair-level dedup itself is the
     canonical-band filter (keep a pair only in the FIRST table whose block
     subset collides — :func:`_first_colliding_band`), a pure expression in
-    the same stage: the whole operator is ONE shuffle (the (band, key)
-    candidate exchange), with no result-set ``dropDuplicates`` exchange.
+    the same stage (:func:`_radius_join`): the whole operator is ONE
+    shuffle (the (band, key) candidate exchange), with no result-set
+    ``dropDuplicates`` exchange.
 
     ``hot_bucket_limit`` (default 2^16 rows per (table, key) bucket) makes
     skewed key distributions fail LOUDLY instead of by quadratic blowup:
     a bucket of L rows emits C(L,2) candidate pairs, so one degenerate key
     (all-same phash megacluster, low-entropy hash bits) turns the join
-    quadratic. The guard is lazy and distributed — a map-side-combined
-    count per bucket checked with ``assert_true`` at execution time, whose
-    exchange the candidate join reuses — and raises naming the hot
-    (band, key, count). Remedies: run exact dedup first (same-hash
+    quadratic. The guard is lazy and distributed — a window count per
+    bucket over the (band, key) exchange the candidate join needs anyway,
+    checked with ``assert_true`` at execution time — and raises naming the
+    hot (band, key, count). Remedies: run exact dedup first (same-hash
     megacluster), widen keys (larger ``bands``/more bits), or raise or
     disable the limit (``None``) if the quadratic cost is intended."""
     if bands == "auto":
@@ -869,49 +880,61 @@ def hamming_near_dups(
         bands = choose_hamming_blocks(n_rows, bits, max_hamming)
     if max_hamming is None:
         max_hamming = bands - 1
-    _check_pigeonhole(max_hamming, bands)
-    # Guard ONE side only (r7): both sides band the same rows, so the
-    # window-count guard on `b` already asserts every bucket exactly once —
-    # guarding `a` too would run a second (identical) window pass. The
-    # unguarded `a` subtree's exchange is canonically equal to the one
-    # under `b`'s window, so AQE reuses the single 10·n-row shuffle.
-    banded_a = banded_signatures(
-        df, hash_col, id_col=id_col, bits=bits, bands=bands,
-        max_hamming=max_hamming, hot_bucket_limit=None,
-    )
-    banded_b = banded_signatures(
+    banded = banded_signatures(
         df, hash_col, id_col=id_col, bits=bits, bands=bands,
         max_hamming=max_hamming, hot_bucket_limit=hot_bucket_limit,
     )
-    layout = _hamming_block_layout(bits, bands)
-    subsets = list(itertools.combinations(range(bands), bands - max_hamming))
-    a = banded_a.select(
-        F.col("band"), F.col("key"), F.col(id_col).alias("id_a"), F.col("sh").alias("sha")
+    # merge: co-locate buckets via the (band, key) shuffle; a broadcast here
+    # would replicate the full banded table (tables*n rows) to every task
+    return _radius_join(
+        (banded, id_col, "id_a"), (banded, id_col, "id_b"),
+        (bits, bands, max_hamming), strategy="merge",
+    ).filter(F.col("id_a") < F.col("id_b"))  # each unordered pair once
+
+
+def _radius_join(
+    left: tuple[DataFrame, str, str],
+    right: tuple[DataFrame, str, str],
+    geometry: tuple[int, int, int],
+    radius: int | None = None,
+    strategy: str | None = None,
+) -> DataFrame:
+    """The one Hamming-radius join tail: pairs of postings within
+    ``radius`` → ``(left name, right name, hamming)``.
+
+    Each side is ``(postings, id column, output name)``, where the postings
+    are ``(id, sh, band, key)`` rows banded with ``geometry`` = ``(bits,
+    bands, max_hamming)`` (:func:`banded_signatures`, or a persisted index
+    of them). ``radius`` (default the design ``max_hamming``) may be
+    smaller than the design radius: a pair within it still collides in at
+    least one table.
+
+    One equi-join on ``(band, key)``; the ``bit_count(xor) <= radius``
+    filter sits in the join stage, BEFORE any pair handling (see
+    :func:`hamming_near_dups`); pair-level dedup is the canonical-band
+    filter. ``strategy`` hints the left side: ``"merge"`` (sort-merge),
+    ``"broadcast"`` (left built and broadcast, right streamed map-side),
+    ``"shuffle_hash"`` (left is the build side: a bucketed right side keeps
+    its layout, and neither side sorts — Spark ≥3 ignores a bucketed
+    table's SORTED BY at scan unless a legacy listing conf is on, so
+    sort-merge would re-sort it) or None (the optimizer's choice)."""
+    layout, subsets = _hamming_geometry(*geometry)
+    if radius is None:
+        radius = geometry[2]
+    lhs, rhs = (
+        df.select("band", "key", F.col(id_col).alias(name), F.col("sh").alias(f"{name}_sh"))
+        for df, id_col, name in (left, right)
     )
-    b = banded_b.select(
-        F.col("band"), F.col("key"), F.col(id_col).alias("id_b"), F.col("sh").alias("shb")
-    )
-    ham = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
+    left_name, right_name = left[2], right[2]
+    xor = F.col(f"{left_name}_sh").bitwiseXOR(F.col(f"{right_name}_sh"))
     return (
-        # merge hint: co-locate buckets via the (band, key) shuffle; a
-        # broadcast here would replicate the full banded table (tables*n
-        # rows) to every task — wrong at any scale worth running.
-        a.join(b.hint("merge"), ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(ham <= F.lit(max_hamming))  # BEFORE pair dedup: see docstring
-        # canonical-band filter replaces dropDuplicates([id_a, id_b]): a pair
-        # colliding in k tables is kept ONLY by the first — pure codegen on
-        # (band, sha^shb), so the pair-level dedup costs ZERO shuffles. At
-        # result sets worth talking about (10^9+ pairs at corpus scale) the
-        # dropDuplicates exchange this removes was the last non-essential
-        # shuffle in the plan.
-        .filter(
-            F.col("band")
-            == _first_colliding_band(
-                F.col("sha").bitwiseXOR(F.col("shb")), layout, subsets
-            )
-        )
-        .select("id_a", "id_b", ham.alias("hamming"))
+        rhs.join(lhs.hint(strategy) if strategy else lhs, ["band", "key"])
+        .filter(F.bit_count(xor) <= F.lit(radius))
+        # canonical-band filter in place of dropDuplicates: a pair colliding
+        # in k tables is kept only by the first, so pair dedup costs no
+        # shuffle
+        .filter(F.col("band") == _first_colliding_band(xor, layout, subsets))
+        .select(left_name, right_name, F.bit_count(xor).alias("hamming"))
     )
 
 

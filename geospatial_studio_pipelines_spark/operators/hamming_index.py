@@ -38,17 +38,11 @@ recall is exactly 1.0 for pairs within ``max_hamming`` when
 
 from __future__ import annotations
 
-import itertools
+from math import comb
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .dedup import (
-    _check_pigeonhole,
-    _first_colliding_band,
-    _hamming_block_layout,
-    banded_signatures,
-)
+from .dedup import _radius_join, banded_signatures
 
 #: sidecar dir name — leading underscore keeps it invisible to parquet scans
 META_DIR = "_gsp_hamming_index"
@@ -69,87 +63,33 @@ def hamming_join(
     corpus: DataFrame,
     hash_col: str,
     probe_id_col: str = "image_id",
-    corpus_id_col: str | None = None,
     bits: int = 64,
     bands: int = 4,
     max_hamming: int | None = None,
-    hot_bucket_limit: int | None = 1 << 16,
-    broadcast_probe: bool | None = None,
 ) -> DataFrame:
     """Asymmetric hamming-radius join: every (probe row, corpus row) pair
     with ``bit_count(xor) <= max_hamming`` → ``(probe_id, corpus_id,
-    hamming)``. Both sides are banded with the same Manku geometry, meet in
-    ONE equi-join on ``(band, key)``, and pair-level dedup is the
-    canonical-band filter (pure codegen — zero extra shuffles), exactly as
-    in ``dedup.hamming_near_dups`` but without the self-join's ``id_a <
-    id_b`` ordering: probe and corpus are different relations, and a probe
-    row may legitimately pair with many corpus rows.
-
-    ``broadcast_probe``: True pins the broadcast-hash plan (probe side
-    built, corpus streamed map-side — no exchange at all), False pins
-    sort-merge, None (default) leaves the choice to the optimizer."""
+    hamming)``. Both sides are banded with the same Manku geometry and meet
+    in ``dedup``'s one Hamming-radius join tail (``(band, key)`` equi-join,
+    canonical-band pair dedup — zero extra shuffles), as in
+    ``dedup.hamming_near_dups`` but without the self-join's ``id_a < id_b``
+    ordering: probe and corpus are different relations, and a probe row
+    may legitimately pair with many corpus rows. Both sides carry their id
+    in ``probe_id_col``; the corpus side is hot-bucket guarded, the probe
+    batch is not; the join strategy is the optimizer's choice."""
     if max_hamming is None:
         max_hamming = bands - 1
-    _check_pigeonhole(max_hamming, bands)
-    if corpus_id_col is None:
-        corpus_id_col = probe_id_col
-    layout = _hamming_block_layout(bits, bands)
-    subsets = list(itertools.combinations(range(bands), bands - max_hamming))
     p = banded_signatures(
         probe, hash_col, id_col=probe_id_col, bits=bits, bands=bands,
         max_hamming=max_hamming, hot_bucket_limit=None,  # probe batch: small
-    ).select(
-        "band", "key",
-        F.col(probe_id_col).alias("probe_id"), F.col("sh").alias("sh_p"),
     )
     c = banded_signatures(
-        corpus, hash_col, id_col=corpus_id_col, bits=bits, bands=bands,
-        max_hamming=max_hamming, hot_bucket_limit=hot_bucket_limit,
-    ).select(
-        "band", "key",
-        F.col(corpus_id_col).alias("corpus_id"), F.col("sh").alias("sh_c"),
+        corpus, hash_col, id_col=probe_id_col, bits=bits, bands=bands,
+        max_hamming=max_hamming,
     )
-    return _joined_pairs(p, c, layout, subsets, max_hamming, broadcast_probe)
-
-
-def _joined_pairs(
-    p: DataFrame,
-    c: DataFrame,
-    layout: list[tuple[int, int]],
-    subsets: list[tuple[int, ...]],
-    max_hamming: int,
-    broadcast_probe: bool | None,
-) -> DataFrame:
-    """Shared probe⋈corpus tail: equi-join on (band, key) → hamming filter
-    BEFORE any pair handling (the r4 scale lesson) → canonical-band dedup.
-
-    ``broadcast_probe``: True pins broadcast-hash (probe built, corpus
-    streamed map-side), False pins SHUFFLED-hash with the probe as build
-    side — the bucketed corpus satisfies the join's clustering
-    requirement in place (no exchange) and, unlike sort-merge, neither
-    side sorts (Spark ≥3 ignores a bucketed table's SORTED BY at scan
-    unless a legacy listing conf is on, so SMJ would re-sort the whole
-    corpus per probe). Probe partitions must fit executor memory: they
-    are postings/buckets wide, and ``buckets`` is sized for the corpus,
-    so any probe small enough to be worth indexing against fits. None
-    leaves the strategy to the optimizer."""
-    if broadcast_probe is True:
-        pb = F.broadcast(p)
-    elif broadcast_probe is False:
-        pb = p.hint("shuffle_hash")
-    else:
-        pb = p
-    ham = F.bit_count(F.col("sh_p").bitwiseXOR(F.col("sh_c")))
-    return (
-        c.join(pb, ["band", "key"])
-        .filter(ham <= F.lit(max_hamming))
-        .filter(
-            F.col("band")
-            == _first_colliding_band(
-                F.col("sh_p").bitwiseXOR(F.col("sh_c")), layout, subsets
-            )
-        )
-        .select("probe_id", "corpus_id", ham.alias("hamming"))
+    return _radius_join(
+        (p, probe_id_col, "probe_id"), (c, probe_id_col, "corpus_id"),
+        (bits, bands, max_hamming),
     )
 
 
@@ -167,10 +107,10 @@ def hamming_join_sql(
     the geometry every oracle-paired query uses). Same shift/mask banding
     on both relations, same popcount verify; the oracle dedups candidate
     pairs with DISTINCT where Spark uses the canonical-band filter — same
-    pair set, different (correctness-scale-irrelevant) plan."""
+    pair set, different (correctness-scale-irrelevant) plan. A radius at
+    or past ``bands`` is outside the classic geometry, so it raises too."""
     if max_hamming is None:
         max_hamming = bands - 1
-    _check_pigeonhole(max_hamming, bands)
     if bands - max_hamming != 1 or bits % bands:
         raise ValueError(
             "SQL twin covers the classic geometry only: bands = max_hamming + 1 "
@@ -247,6 +187,30 @@ def _same_location(a: str, b: str) -> bool:
     return (not auth_a) or (not auth_b) or auth_a == auth_b
 
 
+def _write_buckets(
+    postings: DataFrame, buckets: int, table: str, path: str, mode: str
+) -> None:
+    """The one bucketed write of the index (build, append, compact):
+    ``postings`` as parquet at ``path``, bucketed AND sorted by ``(band,
+    key)`` into ``buckets`` buckets, registered in the catalog as ``table``.
+
+    The explicit ``repartition(buckets, band, key)`` before the write uses
+    the same murmur3 ``HashPartitioning`` as the bucket assignment, so a
+    bucket's rows land in few tasks and the table avoids the
+    every-task-writes-every-bucket small-file explosion. Within-bucket
+    ``sortBy`` keeps (band, key) runs contiguous — better parquet
+    compression and row-group min/max stats for key-filtered scans."""
+    (
+        postings.repartition(buckets, "band", "key")
+        .write.format("parquet")
+        .bucketBy(buckets, "band", "key")
+        .sortBy("band", "key")
+        .option("path", path)
+        .mode(mode)
+        .saveAsTable(table)
+    )
+
+
 def write_hamming_index(
     df: DataFrame,
     table: str,
@@ -261,17 +225,10 @@ def write_hamming_index(
 ) -> None:
     """Band ``df``'s hash column and persist the postings as parquet
     bucketed AND sorted by ``(band, key)`` at ``path``, registered in the
-    session catalog as ``table``; write the geometry sidecar.
-
-    The explicit ``repartition(buckets, band, key)`` before the write uses
-    the same murmur3 ``HashPartitioning`` as the bucket assignment, so a
-    bucket's rows land in few tasks and the table avoids the
-    every-task-writes-every-bucket small-file explosion. Within-bucket
-    ``sortBy`` keeps (band, key) runs contiguous — better parquet
-    compression and row-group min/max stats for key-filtered scans. The
-    hot-bucket guard runs here, at build time, where a degenerate key
-    distribution (all-same-phash megacluster) should fail — not in every
-    probe."""
+    session catalog as ``table`` (:func:`_write_buckets`); write the
+    geometry sidecar. The hot-bucket guard runs here, at build time, where
+    a degenerate key distribution (all-same-phash megacluster) should fail
+    — not in every probe."""
     if max_hamming is None:
         max_hamming = bands - 1
     spark = df.sparkSession
@@ -279,15 +236,7 @@ def write_hamming_index(
         df, hash_col, id_col=id_col, bits=bits, bands=bands,
         max_hamming=max_hamming, hot_bucket_limit=hot_bucket_limit,
     )
-    (
-        banded.repartition(buckets, "band", "key")
-        .write.format("parquet")
-        .bucketBy(buckets, "band", "key")
-        .sortBy("band", "key")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    _write_buckets(banded, buckets, table, path, "overwrite")
     meta = {
         "bits": bits, "bands": bands, "max_hamming": max_hamming,
         "buckets": buckets, "id_col": id_col, "hash_col": hash_col,
@@ -377,15 +326,7 @@ def append_hamming_index(df: DataFrame, table: str, path: str) -> None:
         # the probe-side join explosion loudly via this same guard
         hot_bucket_limit=None,
     )
-    (
-        banded.repartition(meta["buckets"], "band", "key")
-        .write.format("parquet")
-        .bucketBy(meta["buckets"], "band", "key")
-        .sortBy("band", "key")
-        .option("path", path)
-        .mode("append")
-        .saveAsTable(table)
-    )
+    _write_buckets(banded, meta["buckets"], table, path, "append")
 
 
 def compact_hamming_index(spark: SparkSession, table: str, path: str) -> dict:
@@ -406,21 +347,15 @@ def compact_hamming_index(spark: SparkSession, table: str, path: str) -> dict:
     mapping. The swap is delete-then-rename — not atomic; on a metastore
     deployment this step is the transactional table swap (Iceberg/Delta
     rewrite-files commit), and here a concurrent probe during the swap may
-    fail loudly and retry. The sidecar is untouched. Returns stats
-    ``{files_before, files_after, rows}``."""
+    fail loudly and retry. The files deleted are exactly the ones the
+    rewrite read (the read's own file index), so a batch appended while
+    compaction runs is either rewritten or left in place, never both. The
+    sidecar is untouched. Returns stats ``{files_before, files_after,
+    rows}``."""
     meta = register_hamming_index(spark, table, path)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _part_files(d):
-        it = fs.listStatus(hpath(d))
-        return [
-            st.getPath() for st in it
-            if st.isFile() and st.getPath().getName().startswith("part-")
-        ]
-
-    before = _part_files(path)
     staging_path = path.rstrip("/") + "__compacting"
     staging_table = table + "__compacting"
     fs.delete(hpath(staging_path), True)
@@ -431,32 +366,29 @@ def compact_hamming_index(spark: SparkSession, table: str, path: str) -> dict:
     # runs on arbitrary file-grouped partitions and every task emits a file
     # per bucket — the exact small-file debris compaction exists to remove.
     # A plain scan keeps the explicit shuffle, aligning tasks 1:1 with
-    # buckets (~one output file each).
-    (
-        spark.read.parquet(path)
-        .repartition(meta["buckets"], "band", "key")
-        .write.format("parquet")
-        .bucketBy(meta["buckets"], "band", "key")
-        .sortBy("band", "key")
-        .option("path", staging_path)
-        .mode("overwrite")
-        .saveAsTable(staging_table)
-    )
+    # buckets (~one output file each). The read lists the directory once;
+    # its file index is the list of files to delete.
+    src = spark.read.parquet(path)
+    before = src.inputFiles()
+    _write_buckets(src, meta["buckets"], staging_table, staging_path, "overwrite")
     rows = spark.table(staging_table).count()
     spark.sql(f"DROP TABLE {staging_table}")  # external table: files remain
     # swap: old part files out, compacted part files in (sidecar untouched)
     for f in before:
-        fs.delete(f, False)
-    after = []
-    for f in _part_files(staging_path):
+        fs.delete(hpath(jvm.java.net.URI(f)), False)
+    after = 0
+    for st in fs.listStatus(hpath(staging_path)):
+        f = st.getPath()
+        if not (st.isFile() and f.getName().startswith("part-")):
+            continue
         dest = hpath(path + "/" + f.getName())
         if not fs.rename(f, dest):
             raise IOError(f"compaction swap failed renaming {f} -> {dest}")
-        after.append(dest)
+        after += 1
     fs.delete(hpath(staging_path), True)
     # refresh so the already-registered table sees the new file list
     spark.sql(f"REFRESH TABLE {table}")
-    return {"files_before": len(before), "files_after": len(after), "rows": rows}
+    return {"files_before": len(before), "files_after": after, "rows": rows}
 
 
 def probe_hamming_index(
@@ -491,26 +423,14 @@ def probe_hamming_index(
             f"probe radius {max_hamming} exceeds the index design radius "
             f"{meta['max_hamming']} — rebuild the index for the wider radius"
         )
-    bits, bands = meta["bits"], meta["bands"]
-    layout = _hamming_block_layout(bits, bands)
-    subsets = list(
-        itertools.combinations(range(bands), bands - meta["max_hamming"])
-    )
     if probe_rows is None:
         probe_rows = probe.count()
-    p = banded_signatures(
-        probe, hash_col or meta["hash_col"], id_col=probe_id_col, bits=bits,
-        bands=bands, max_hamming=meta["max_hamming"], hot_bucket_limit=None,
-    ).select(
-        "band", "key",
-        F.col(probe_id_col).alias("probe_id"), F.col("sh").alias("sh_p"),
+    tables = comb(meta["bands"], meta["max_hamming"])
+    small = probe_rows * tables <= PROBE_BROADCAST_MAX_POSTINGS
+    return _probe_index(
+        spark, table, meta, probe, probe_id_col, hash_col, max_hamming,
+        "broadcast" if small else "shuffle_hash",
     )
-    c = spark.table(table).select(
-        "band", "key",
-        F.col(meta["id_col"]).alias("corpus_id"), F.col("sh").alias("sh_c"),
-    )
-    broadcast = probe_rows * len(subsets) <= PROBE_BROADCAST_MAX_POSTINGS
-    return _joined_pairs(p, c, layout, subsets, max_hamming, broadcast)
 
 
 def probe_stream(
@@ -523,31 +443,47 @@ def probe_stream(
 ) -> DataFrame:
     """Streaming twin of :func:`probe_hamming_index`: a stream-static join
     flagging, per micro-batch, every arriving image that near-duplicates
-    the persisted corpus. Banding is a stateless projection and pair dedup
-    is the canonical-band filter — also stateless — so the query runs in
-    APPEND mode with no state store at all; at-least-once re-delivery of an
-    input file re-emits that file's pairs (dedup downstream on
-    (probe_id, corpus_id) if the sink needs exactly-once, or feed from an
-    exactly-once source). The static corpus side is re-planned per batch
-    against the bucketed table — the same exchange-free scan as the batch
-    probe. (High-frequency tiny batches amortize poorly against a 100-TB
-    static side; micro-batch sizing — maxFilesPerTrigger — is the lever.)"""
+    the persisted corpus. It is the batch probe's body on its shuffled-hash
+    path, without the routing ``count()``. Banding is a stateless
+    projection and pair dedup is the canonical-band filter — also
+    stateless — so the query runs in APPEND mode with no state store at
+    all; at-least-once re-delivery of an input file re-emits that file's
+    pairs (dedup downstream on (probe_id, corpus_id) if the sink needs
+    exactly-once, or feed from an exactly-once source). The static corpus
+    side is re-planned per batch against the bucketed table — the same
+    exchange-free scan as the batch probe. (High-frequency tiny batches
+    amortize poorly against a 100-TB static side; micro-batch sizing —
+    maxFilesPerTrigger — is the lever.) The count-based hot-bucket guard
+    is a batch concept and does not run here."""
     meta = register_hamming_index(spark, table, path)
-    bits, bands = meta["bits"], meta["bands"]
-    layout = _hamming_block_layout(bits, bands)
-    subsets = list(
-        itertools.combinations(range(bands), bands - meta["max_hamming"])
+    return _probe_index(
+        spark, table, meta, stream_df, probe_id_col, hash_col,
+        meta["max_hamming"], "shuffle_hash",
     )
+
+
+def _probe_index(
+    spark: SparkSession,
+    table: str,
+    meta: dict,
+    probe: DataFrame,
+    probe_id_col: str,
+    hash_col: str | None,
+    radius: int,
+    strategy: str,
+) -> DataFrame:
+    """The probe body shared by the batch and the streaming probe: band the
+    probe with the index's geometry (sidecar ``meta``) and join it, as the
+    hinted build side, to the bucketed corpus table. On the shuffled-hash
+    path the probe's partitions must fit executor memory: they are
+    postings/buckets wide, and ``buckets`` is sized for the corpus, so any
+    probe small enough to be worth indexing against fits."""
+    bits, bands, design = meta["bits"], meta["bands"], meta["max_hamming"]
     p = banded_signatures(
-        stream_df, hash_col or meta["hash_col"], id_col=probe_id_col,
-        bits=bits, bands=bands, max_hamming=meta["max_hamming"],
-        hot_bucket_limit=None,  # count-based guard is a batch concept
-    ).select(
-        "band", "key",
-        F.col(probe_id_col).alias("probe_id"), F.col("sh").alias("sh_p"),
+        probe, hash_col or meta["hash_col"], id_col=probe_id_col, bits=bits,
+        bands=bands, max_hamming=design, hot_bucket_limit=None,
     )
-    c = spark.table(table).select(
-        "band", "key",
-        F.col(meta["id_col"]).alias("corpus_id"), F.col("sh").alias("sh_c"),
+    return _radius_join(
+        (p, probe_id_col, "probe_id"), (spark.table(table), meta["id_col"], "corpus_id"),
+        (bits, bands, design), radius, strategy,
     )
-    return _joined_pairs(p, c, layout, subsets, meta["max_hamming"], False)

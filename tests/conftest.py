@@ -13,3 +13,26 @@ def spark():
     s = spark_session(app_name="gsp-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def append_before_read(monkeypatch):
+    """``append_before_read(path, append)`` runs ``append`` once, right
+    before the next ``spark.read.parquet(path)``: a concurrent writer that
+    lands after an index compaction has listed its files and before it
+    reads them."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.parquet
+
+    def arm(path, append):
+        pending = [append]
+
+        def parquet(self, *paths, **options):
+            if pending and paths == (path,):
+                pending.pop()()
+            return real(self, *paths, **options)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+
+    return arm

@@ -133,3 +133,19 @@ def test_compaction_preserves_probes_and_reduces_files(spark, emb, tmp_path_fact
     pf = pf[: pf.find("]") + 1]
     assert pf.startswith("PartitionFilters: [") and "list" in pf
     assert pf != "PartitionFilters: []"
+
+
+def test_compaction_keeps_rows_appended_during_it(spark, emb, tmp_path_factory, append_before_read):
+    """Vectors appended while compaction runs are either rewritten and their
+    old files deleted, or left alone; never both, which would duplicate
+    them in every later probe."""
+    path = str(tmp_path_factory.mktemp("ivf") / "idx")
+    ann_index.write_ivf_index(emb, path, nlist=8, dim=64)
+    late = emb.filter(F.col("vec_id") < 30).select(
+        (F.col("vec_id") + 50_000).alias("vec_id"), "embedding"
+    )
+    append_before_read(path, lambda: ann_index.append_ivf_index(late, path))
+    ann_index.compact_ivf_index(spark, path)
+    rows = spark.read.parquet(path)
+    assert rows.count() == emb.count() + 30
+    assert rows.groupBy("vec_id").count().filter("count > 1").count() == 0

@@ -516,3 +516,46 @@ def test_append_compact_append_probe_lifecycle(spark, index_dir, tmp_path):
     assert got == want and len(got) >= 40
     spark.sql("DROP TABLE t_cyc")
     spark.sql("DROP TABLE t_plain")
+
+
+def test_hamming_index_imports_no_geometry_helper():
+    """The Hamming-radius algorithm (geometry, banding, the canonical-band
+    filter, the join tail) lives in ``dedup``; ``hamming_index`` keeps only
+    storage and reaches the algorithm through one join tail."""
+    import ast
+    from pathlib import Path
+
+    src = Path(hamming_index.__file__).read_text()
+    assert src.count(".bucketBy(") == 1  # build, append and compact share one write
+    tree = ast.parse(src)
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            imported |= {a.name for a in node.names} | {node.module or ""}
+    assert not imported & {
+        "_check_pigeonhole", "_first_colliding_band", "_hamming_block_layout", "itertools"
+    }
+    assert "_joined_pairs" not in vars(hamming_index)
+
+
+def test_compaction_keeps_postings_appended_during_it(spark, index_dir, append_before_read):
+    """A batch appended while compaction runs is either rewritten and its
+    old files deleted, or left alone; never both, which would duplicate its
+    postings and every pair a later probe finds through them."""
+    hamming_index.write_hamming_index(
+        _corpus(spark, 1000), "t_race", index_dir, hash_col="phash", bits=62,
+        bands=4, buckets=4,
+    )
+    late = spark.range(1000, 1200).select(
+        F.col("id").alias("image_id"), _mix(F.col("id")).alias("phash")
+    )
+    append_before_read(
+        index_dir, lambda: hamming_index.append_hamming_index(late, "t_race", index_dir)
+    )
+    hamming_index.compact_hamming_index(spark, "t_race", index_dir)
+    postings = spark.read.parquet(index_dir)
+    assert postings.count() == 1200 * 4
+    assert postings.groupBy("band", "key", "image_id").count().filter("count > 1").count() == 0
+    spark.sql("DROP TABLE t_race")

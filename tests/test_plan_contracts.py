@@ -20,6 +20,7 @@ plan quietly dies. These tests pin the plan properties themselves:
 """
 import importlib.util
 import os
+import re
 
 import pytest
 
@@ -147,3 +148,26 @@ def test_corpus_clean_pairs_drop_side_has_no_dedup_aggregate(spark):
     optimized plan is the exact-dedup keeper min(doc_id) per fingerprint."""
     plan = _optimized(contracts.q_corpus_clean(spark, SF_DIR))
     assert plan.count("Aggregate") == 1
+
+
+def test_hamming_self_join_bands_once_and_reuses_its_shuffle(spark, tmp_path):
+    """The self-join bands its input once and joins that frame to itself,
+    so the two sides' (band, key) exchanges are canonically equal and the
+    final adaptive plan runs one shuffle and reuses it for the other side.
+    A parquet source is the benchmark's shape."""
+    from pyspark.sql import functions as F
+
+    from geospatial_studio_pipelines_spark.operators import dedup
+
+    src = str(tmp_path / "phash")
+    spark.range(2000).select(
+        F.col("id").alias("image_id"),
+        F.xxhash64(F.col("id") % 1500).bitwiseAND(F.lit(2**62 - 1)).alias("phash"),
+    ).write.parquet(src)
+    out = dedup.hamming_near_dups(
+        spark.read.parquet(src), "phash", id_col="image_id", bits=62, max_hamming=3
+    )
+    plan = re.sub(r"#\d+L?", "", _final_plan(out))  # drop expression ids
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    assert sum(n.startswith("Exchange hashpartitioning(band, key") for n in nodes) == 1, plan
+    assert sum(n.startswith("ReusedExchange") for n in nodes) == 1, plan
