@@ -14,11 +14,11 @@ this container, so:
   the container format below is used. Container: ``GJ1\\0 | h u32 | w u32 |
   c u8 | q u8 | zlib(int16 dct coeffs)``.
 * **raw** — header + raw pixels, any dtype (QA bands, float32 model outputs
-  with nodata −9999 per raster_data_operations.py:30). Container:
+  with nodata ``NODATA`` = −9999 per raster_data_operations.py:30). Container:
   ``GR1\\0 | h u32 | w u32 | c u8 | dtype-code u8 | raw``.
 
 Every function operates on one buffer; batching happens in the calling
-pandas UDF (one Arrow batch = many images), mirroring how the reference
+stage (``raster.map_images``: one Arrow batch = many images), mirroring how the reference
 decodes rasters one file at a time (raster_data_operations.py:34-59) but
 amortized across a vectorized batch.
 """
@@ -37,6 +37,8 @@ try:  # real libjpeg path when PIL is available on the cluster
     _HAS_PIL = True
 except ImportError:
     _HAS_PIL = False
+
+NODATA = -9999.0  # missing-pixel value of float rasters (raster_data_operations.py:30)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _GJ_MAGIC = b"GJ1\x00"

@@ -1268,11 +1268,11 @@ def q_image_pipeline(spark, sf_dir):
     from .geo import wkb as W
     from .operators import footprints, masking, raster, regularize, vectorize
 
-    # 8 partitions for 60 rows: this chain crosses the Python boundary 7
-    # times, and each (task × Python stage) pays a fixed worker round-trip —
-    # at the session default 32 partitions that is 224 near-empty sessions
-    # per run (measured 6-24s wall, wildly variant under co-tenant load) vs
-    # ~56 at 8 partitions (measured 4.1-4.6s, stable). Row content is a pure
+    # 8 partitions for 60 rows: each Python stage of this chain (the image
+    # generator and the six ``raster.map_images`` stages) pays a fixed worker
+    # round-trip per task — at the session default 32 partitions that is
+    # hundreds of near-empty sessions per run (measured 6-24s wall, wildly
+    # variant under co-tenant load) vs 4.1-4.6s at 8 partitions. Row content is a pure
     # function of the ordinal, so partitioning never changes results.
     images = footprints.with_footprint(datagen.images_df(spark, 60, partitions=8))
     spec = [
@@ -1281,9 +1281,9 @@ def q_image_pipeline(spark, sf_dir):
         {"name": "B02", "RGB_band": "B", "index": 2},
     ]
     # project before the opaque stages (guide: Spark cannot prune columns
-    # through mapInPandas): drop fmt/caption/phash/date/modality, which no
+    # through a Python map): drop fmt/caption/phash/date/modality, which no
     # downstream stage reads — they would otherwise ride every Arrow batch
-    # through all 7 Python crossings
+    # through every Python crossing
     images = images.select(
         "image_id", "bytes", "w", "h", "minx", "miny", "maxx", "maxy"
     )
@@ -1292,7 +1292,7 @@ def q_image_pipeline(spark, sf_dir):
         "image_id", "w", "h", "minx", "miny", "maxx", "maxy", "pred_bytes"
     )
     # broadcast-hint the (30-row) QA side: Spark's size estimate for the
-    # Range→mapInPandas image chain is near zero, so without the hint the
+    # Range→mapInArrow image chain is near zero, so without the hint the
     # optimizer broadcast the IMAGE side — collecting the whole decode chain
     # through the driver and capping downstream parallelism at the
     # LocalTableScan's partitioning (BuildLeft in the r6 plan)

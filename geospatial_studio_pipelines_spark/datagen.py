@@ -7,7 +7,7 @@ mirrors the determinism the reference pins with ``random_state=0``
 byte-identical (SURVEY.md §7.4.5/6).
 
 The ``images`` table is generated **distributed**: ``spark.range(n)`` →
-``mapInPandas`` encoding pixels per Arrow batch. At the 10^12-image design
+``raster.map_images`` encoding pixels per Arrow batch. At the 10^12-image design
 scale generation is itself a big job; a driver-side loop would never work, so
 the generator is written exactly like any other engine operator.
 """
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .codecs.image import encode_image
 from .geo import wkb
+from .operators.raster import map_images
 
 IMAGES_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
@@ -62,13 +63,8 @@ def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> Dat
     """Distributed images fixture: one row per ordinal in [0, n)."""
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 4)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [image_row(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, IMAGES_SCHEMA)
+    ids = spark.range(0, n, numPartitions=partitions)
+    return map_images(ids, lambda row: [image_row(row["id"])], [], IMAGES_SCHEMA, keep=[])
 
 
 def images_pdf(n: int) -> pd.DataFrame:

@@ -27,8 +27,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..codecs.image import NODATA
+
 R_MERC = 6378137.0  # EPSG:3857 sphere radius (meters)
-NODATA = -9999.0
 
 
 def lonlat_to_webmerc(lon, lat):

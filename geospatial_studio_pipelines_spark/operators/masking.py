@@ -13,21 +13,24 @@ Reference semantics reproduced exactly
 * LULC water class [1] (:50)
 
 The raster-mask join (J4) is an equi-join on image_id followed by numpy
-broadcasting inside one ``mapInPandas`` — the Spark shape of "align the
-prediction with the input's QA band".
+broadcasting per joined row in ``raster.map_images`` — the Spark shape of
+"align the prediction with the input's QA band".
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..codecs.image import decode_image, encode_image
+from ..codecs.image import NODATA
 from ..geo.wkb import dumps_polygon
 from ..geo.wkb import polygon_rings as wkb_rings
+from .raster import map_images
+
+if TYPE_CHECKING:  # the stages' Python workers need no pandas (see raster.stack_bands)
+    import pandas as pd
 
 CLOUD_VALUE = 999.0
 SNOW_OR_ICE_VALUE = 998.0
@@ -87,31 +90,17 @@ def apply_mask_chain(
     """
     joined = preds.join(qa.select("image_id", qa_col), "image_id")
     steps = [c for c in _CHAIN if c[0] in kinds]
-    carry = [c for c in preds.columns]
-    schema = ", ".join(f"{c} {t}" for c, t in preds.dtypes) + f", {out_col} binary"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            outs = []
-            for _, row in pdf.iterrows():
-                pred = decode_image(bytes(row[pred_col]))
-                qa_arr = decode_image(bytes(row[qa_col]))
-                for _name, _s, classes, bits, value in steps:
-                    if scheme == "s2":
-                        pred = s2_mask_array(pred, qa_arr, classes, value)
-                    else:
-                        pred = hls_mask_array(pred, qa_arr, bits, value)
-                outs.append(encode_image(pred.astype(np.float32), "raw"))
-            out = pdf[carry].copy()
-            out[out_col] = outs
-            yield out
+    def fn(row):
+        pred, qa_arr = row[pred_col], row[qa_col]
+        for _name, _s, classes, bits, value in steps:
+            if scheme == "s2":
+                pred = s2_mask_array(pred, qa_arr, classes, value)
+            else:
+                pred = hls_mask_array(pred, qa_arr, bits, value)
+        yield {out_col: pred.astype(np.float32)}
 
-    return joined.mapInPandas(run, schema)
-
-
-NODATA = -9999.0  # raster_data_operations.py:30
+    return map_images(joined, fn, [pred_col, qa_col], f"{out_col} binary", keep=preds.columns)
 
 
 def _world_rings_to_pixel(rings, minx, miny, maxx, maxy, w, h):
@@ -134,9 +123,9 @@ def _vector_mask_op(
 ):
     """Shared scaffolding for F13/F14: broadcast the packed vector layer
     (R-tree + decoded rings, same pack as the broadcast spatial join), then
-    one mapInPandas pass — per image: R-tree bbox query → ``fn(arr, rings
-    in pixel space)``. The layer crosses the wire once per executor; pixels
-    never leave the Arrow batch."""
+    per image: R-tree bbox query → ``fn(arr, rings in pixel space)``. The
+    layer crosses the wire once per executor and is unpacked on a task's
+    first image; pixels never leave the Arrow batch."""
     import pickle
 
     from .spatial_join import pack_aois
@@ -146,32 +135,19 @@ def _vector_mask_op(
         layer_pdf["aoi_id"] = np.arange(len(layer_pdf))
     packed = pack_aois(layer_pdf)
     bc = images.sparkSession.sparkContext.broadcast(packed)
-    bminx, bminy, bmaxx, bmaxy = bounds_cols
-    cols = list(images.columns)
-    schema = ", ".join(f"{c} {t}" for c, t in images.dtypes) + f", {out_col} binary"
+    layer: dict = {}
 
-    def run(batches):
-        layer = pickle.loads(bc.value)
-        tree, rings_all = layer["tree"], layer["rings"]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            blobs = []
-            for _, row in pdf.iterrows():
-                arr = decode_image(bytes(row[in_col]))
-                h, w = arr.shape[0], arr.shape[1]
-                box = np.array([[row[bminx], row[bminy], row[bmaxx], row[bmaxy]]])
-                _, ti = tree.query_many(box)
-                pix_polys = [
-                    _world_rings_to_pixel(rings_all[t], row[bminx], row[bminy], row[bmaxx], row[bmaxy], w, h)
-                    for t in ti
-                ]
-                blobs.append(encode_image(fn(arr, pix_polys, w, h), "raw"))
-            out = pdf[cols].copy()
-            out[out_col] = blobs
-            yield out
+    def mask_row(row):
+        if not layer:
+            layer.update(pickle.loads(bc.value))
+        arr = row[in_col]
+        h, w = arr.shape[0], arr.shape[1]
+        bounds = [row[c] for c in bounds_cols]
+        _, ti = layer["tree"].query_many(np.array([bounds]))
+        pix_polys = [_world_rings_to_pixel(layer["rings"][t], *bounds, w, h) for t in ti]
+        yield {out_col: fn(arr, pix_polys, w, h)}
 
-    return images.mapInPandas(run, schema)
+    return map_images(images, mask_row, [in_col], f"{out_col} binary")
 
 
 def mask_ocean(

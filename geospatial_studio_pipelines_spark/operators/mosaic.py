@@ -19,9 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..codecs.image import decode_image, encode_image
-
-NODATA = -9999.0
+from ..codecs.image import NODATA, decode_image, encode_image
 
 METHODS = ("first", "last", "min", "max", "median", "average")
 
@@ -132,6 +130,7 @@ def overlap_average(
             {"image_id": [pdf["image_id"].iloc[0]], "w": [w], "h": [h], out_col: [encode_image(out, "raw")]}
         )
 
+    id_type = dict(windows.dtypes)["image_id"]
     return windows.groupBy("image_id").applyInPandas(
-        merge, f"image_id string, w int, h int, {out_col} binary"
+        merge, f"image_id {id_type}, w int, h int, {out_col} binary"
     )

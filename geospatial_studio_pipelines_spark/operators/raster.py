@@ -1,55 +1,80 @@
-"""Raster pixel operators — Arrow-batched pandas UDF stages over the
-``bytes`` column (SURVEY.md §2.8 F1–F10, §3.3 per-task data path).
+"""Raster pixel operators — per-image stages over the ``bytes`` column
+(SURVEY.md §2.8 F1–F10, §3.3 per-task data path).
 
-Each public function is a DataFrame→DataFrame stage; pixels only exist inside
-the UDF (decoded per Arrow batch, bounded by ``maxRecordsPerBatch``). The
-chain mirrors the reference's fetch→impute/scale→infer path
-(``terrakit_data_fetch.py:84-172`` → ``run-inference.py``), with the model
-replaced by a deterministic pseudo-inference so outputs are checkable
-(SURVEY.md §7.2 step 7).
+Each public function is a DataFrame→DataFrame stage. Every row-wise stage
+(here and in ``masking``, ``vectorize``, ``regularize`` and ``tiling``) is a
+thin caller of ``map_images``, one ``mapInArrow`` loop: pixels only exist
+inside it, decoded per row of an Arrow batch (bounded by
+``maxRecordsPerBatch``). The chain mirrors the reference's
+fetch→impute/scale→infer path (``terrakit_data_fetch.py:84-172`` →
+``run-inference.py``), with the model replaced by a deterministic
+pseudo-inference so outputs are checkable (SURVEY.md §7.2 step 7).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import col as F_col
 
-from ..codecs.image import decode_image, encode_image
-
-NODATA = -9999.0  # raster_data_operations.py:30
+from ..codecs.image import NODATA, decode_image, encode_image
 
 
-def _map_images(
+def map_images(
     df: DataFrame,
-    fn,
-    in_col: str,
-    out_col: str,
-    extra_out: str = "",
-    carry: tuple[str, ...] | None = None,
-):
-    """Run ``fn(ndarray HxWxC, row) -> ndarray`` over each image, re-encoding
-    as raw float32/uint8. Keeps all input columns, adds ``out_col``."""
-    cols = list(df.columns) if carry is None else list(carry)
-    schema = ", ".join(f"{c} {t}" for c, t in df.dtypes if c in cols)
-    schema += f", {out_col} binary" + (f", {extra_out}" if extra_out else "")
+    fn: Callable[[dict], Iterable[dict]],
+    decode: Sequence[str],
+    out: str,
+    keep: Sequence[str] | None = None,
+) -> DataFrame:
+    """The one per-row stage loop: a single ``mapInArrow`` over ``df``.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+    ``fn(row)`` gets a dict of the row's columns, each ``decode`` column
+    decoded to an HxWxC ndarray, and returns zero or more output dicts over
+    the ``out`` fields (a DDL string); an ndarray value is encoded raw. The
+    ``keep`` columns (default: all of ``df``) pass through as Arrow arrays
+    taken by parent row, so their types are ``df``'s own; an ``out`` field
+    named like a kept column replaces it in place. Exceptions raised in
+    ``fn`` propagate unchanged."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType, StructType
+
+    keep = list(df.columns if keep is None else keep)
+    fields = DataType.fromDDL(out).fields
+    by_name = {f.name: f for f in fields}
+    schema = StructType(
+        [by_name.get(c, df.schema[c]) for c in keep] + [f for f in fields if f.name not in keep]
+    )
+    passed = [c for c in keep if c not in by_name]
+    types = {f.name: to_arrow_type(f.dataType) for f in fields}
+
+    def run(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            cols = rb.to_pydict()
+            parents, outs = [], []
+            for i in range(rb.num_rows):
+                row = {c: v[i] for c, v in cols.items()}
+                for c in decode:
+                    row[c] = decode_image(row[c])
+                for o in fn(row):
+                    parents.append(i)
+                    outs.append(o)
+            if not outs:
                 continue
-            outs = []
-            for _, row in pdf.iterrows():
-                arr = decode_image(bytes(row[in_col]))
-                outs.append(fn(arr, row))
-            out = pdf[cols].copy()
-            out[out_col] = [encode_image(a, "raw") for a in outs]
-            yield out
+            idx = pa.array(parents, type=pa.int64())
+            arrays = {c: rb.column(c).take(idx) for c in passed}
+            for c, t in types.items():
+                vals = [o[c] for o in outs]
+                arrays[c] = pa.array(
+                    [encode_image(v, "raw") if isinstance(v, np.ndarray) else v for v in vals], type=t
+                )
+            yield pa.RecordBatch.from_arrays([arrays[c] for c in schema.names], names=schema.names)
 
-    return df.mapInPandas(run, schema)
+    return df.mapInArrow(run, schema)
 
 
 # --------------------------------------------------------- F1: to_decibels
@@ -59,16 +84,16 @@ def to_decibels(df: DataFrame, in_col: str = "bytes", out_col: str = "db_bytes",
     """10·log10(x) applied to the given band planes (S1GRD bands 0–1 only,
     terrakit_data_fetch.py:41-49); zeros map to NODATA instead of -inf."""
 
-    def fn(arr, _row):
-        out = arr.astype(np.float32)
+    def fn(row):
+        out = row[in_col].astype(np.float32)
         for b in bands:
             if b < out.shape[2]:
                 plane = out[:, :, b]
                 with np.errstate(divide="ignore"):
                     out[:, :, b] = np.where(plane > 0, 10.0 * np.log10(plane), NODATA)
-        return out
+        yield {out_col: out}
 
-    return _map_images(df, fn, in_col, out_col)
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 # -------------------------------------------------------- F2: band scaling
@@ -79,13 +104,13 @@ def scale_bands(df: DataFrame, factors: list[float], in_col: str = "bytes", out_
     missing factors default to 1.0 like the reference's spec lookup."""
     fac = np.asarray(factors, dtype=np.float32)
 
-    def fn(arr, _row):
-        out = arr.astype(np.float32)
+    def fn(row):
+        out = row[in_col].astype(np.float32)
         n = min(out.shape[2], len(fac))
         out[:, :, :n] *= fac[:n]
-        return out
+        yield {out_col: out}
 
-    return _map_images(df, fn, in_col, out_col)
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 # ------------------------------------------------------- F3: impute nans
@@ -157,6 +182,23 @@ def crop_window(arr: np.ndarray, col_off: int, row_off: int, w: int, h: int) -> 
     return arr[r0 : min(H, row_off + h), c0 : min(W, col_off + w), :]
 
 
+def _warp_row(row, in_col, src_crs_col, dst_crs, bounds_cols, h_col, w_col, method):
+    """F7 inverse-mapping warp of one row's raster onto an (h, w) grid over
+    its bbox transformed into ``dst_crs``; returns (dst bounds, pixels)."""
+    from ..geo import crs as C
+
+    src_crs = str(row[src_crs_col])
+    src_bounds = tuple(row[c] for c in bounds_cols)
+    xs, ys = C.transform_points(
+        src_crs, dst_crs, np.array([src_bounds[0], src_bounds[2]]), np.array([src_bounds[1], src_bounds[3]])
+    )
+    dst_bounds = (float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1]))
+    warped = C.warp_array(
+        row[in_col], src_bounds, src_crs, dst_bounds, dst_crs, int(row[h_col]), int(row[w_col]), method
+    )
+    return dst_bounds, warped
+
+
 def match_to_target(
     df: DataFrame,
     in_col: str,
@@ -173,30 +215,19 @@ def match_to_target(
     inverse-mapping warp — gdalwarp's ``-t_srs`` + ``-ts`` in one pass —
     so mixed-CRS inputs land on one common grid like the reference's
     ``check_projection`` + match chain."""
+    out_col = in_col.replace("bytes", "") + "aligned_bytes"
     if src_crs_col is not None and dst_crs is not None:
-        from ..geo import crs as C
 
-        bminx, bminy, bmaxx, bmaxy = bounds_cols
-
-        def fn(arr, row):
-            src_bounds = (row[bminx], row[bminy], row[bmaxx], row[bmaxy])
-            xs, ys = C.transform_points(
-                str(row[src_crs_col]), dst_crs,
-                np.array([src_bounds[0], src_bounds[2]]),
-                np.array([src_bounds[1], src_bounds[3]]),
-            )
-            return C.warp_array(
-                arr, src_bounds, str(row[src_crs_col]),
-                (float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1])), dst_crs,
-                int(row[target_h]), int(row[target_w]), method,
-            )
+        def fn(row):
+            _, warped = _warp_row(row, in_col, src_crs_col, dst_crs, bounds_cols, target_h, target_w, method)
+            yield {out_col: warped}
 
     else:
 
-        def fn(arr, row):
-            return resize_array(arr, int(row[target_h]), int(row[target_w]), method)
+        def fn(row):
+            yield {out_col: resize_array(row[in_col], int(row[target_h]), int(row[target_w]), method)}
 
-    return _map_images(df, fn, in_col, in_col.replace("bytes", "") + "aligned_bytes")
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 def reproject(
@@ -221,47 +252,15 @@ def reproject(
     ``crs``, so stale source-CRS bounds there would silently corrupt every
     later stage (r2 emitted separate ``dst_*`` columns and left the
     canonical ones untouched — ADVICE fix)."""
-    from ..geo import crs as C
-
     out_col = out_col or in_col.replace("bytes", "") + "warped_bytes"
-    bminx, bminy, bmaxx, bmaxy = bounds_cols
-    cols = [c for c in df.columns]
-    dtypes = dict(df.dtypes)
-    for c in bounds_cols:
-        dtypes[c] = "double"  # warped bounds are double regardless of input
-    schema = ", ".join(f"{c} {dtypes[c]}" for c in cols)
-    schema += f", {out_col} binary"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            blobs, bs = [], []
-            for _, row in pdf.iterrows():
-                arr = decode_image(bytes(row[in_col]))
-                src_bounds = (row[bminx], row[bminy], row[bmaxx], row[bmaxy])
-                xs, ys = C.transform_points(
-                    str(row[src_crs_col]),
-                    dst_crs,
-                    np.array([src_bounds[0], src_bounds[2]]),
-                    np.array([src_bounds[1], src_bounds[3]]),
-                )
-                dst_bounds = (float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1]))
-                warped = C.warp_array(
-                    arr, src_bounds, str(row[src_crs_col]), dst_bounds, dst_crs,
-                    int(row[out_h_col]), int(row[out_w_col]), method,
-                )
-                blobs.append(encode_image(warped, "raw"))
-                bs.append(dst_bounds)
-            out = pdf[cols].copy()
-            arr_b = np.array(bs, dtype=np.float64).reshape(-1, 4)
-            out[bminx], out[bminy] = arr_b[:, 0], arr_b[:, 1]
-            out[bmaxx], out[bmaxy] = arr_b[:, 2], arr_b[:, 3]
-            out[src_crs_col] = dst_crs
-            out[out_col] = blobs
-            yield out
+    def fn(row):
+        dst_bounds, warped = _warp_row(row, in_col, src_crs_col, dst_crs, bounds_cols, out_h_col, out_w_col, method)
+        yield {**dict(zip(bounds_cols, dst_bounds)), src_crs_col: dst_crs, out_col: warped}
 
-    return df.mapInPandas(run, schema)
+    # warped bounds are double regardless of input
+    out = ", ".join(f"{c} double" for c in bounds_cols)
+    return map_images(df, fn, [in_col], f"{out}, {src_crs_col} string, {out_col} binary")
 
 
 # ------------------------------------------- P2: RGB projection (make_rgb)
@@ -293,12 +292,13 @@ def make_rgb(
     if any(i is None for i in idxs):
         raise ValueError(f"band spec has no RGB bands: {bands_spec!r}")
 
-    def fn(arr, _row):
+    def fn(row):
+        arr = row[in_col]
         if max(idxs) >= arr.shape[2]:
             raise ValueError(f"image has {arr.shape[2]} bands; RGB spec wants {idxs}")
-        return arr[:, :, idxs].astype(np.float32)
+        yield {out_col: arr[:, :, idxs].astype(np.float32)}
 
-    return _map_images(df, fn, in_col, out_col)
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 # ----------------------------------------------- F10: band stacking
@@ -316,6 +316,9 @@ def stack_bands(
     ascending ``band_col`` (the reference's list order). Spark shape: a
     grouped ``applyInPandas`` per image — each group is one image's bands,
     so group size is bounded by band count, never by image count."""
+    # imported here: a Python worker that runs only ``map_images`` stages
+    # never needs pandas, whose import costs a fresh worker ~0.4 s (4-CPU host)
+    import pandas as pd
 
     def stack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(band_col)
@@ -339,10 +342,10 @@ def change_dtype(df: DataFrame, dtype: str, in_col: str = "bytes", out_col: str 
     out_col = out_col or in_col.replace("bytes", "") + "cast_bytes"
     np_dtype = np.dtype(dtype)
 
-    def fn(arr, _row):
-        return arr.astype(np_dtype)
+    def fn(row):
+        yield {out_col: row[in_col].astype(np_dtype)}
 
-    return _map_images(df, fn, in_col, out_col)
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 # ------------------------------------------- P6: all-zero data-cube guard
@@ -354,18 +357,10 @@ def with_all_zero_flag(df: DataFrame, in_col: str = "bytes", flag_col: str = "al
     shape: a boolean column + downstream filter instead of a per-task
     exception — a poisoned row must not kill the other 10^12."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf.copy()
-            out[flag_col] = [
-                bool((decode_image(bytes(b)) == 0).all()) for b in pdf[in_col]
-            ]
-            yield out
+    def fn(row):
+        yield {flag_col: bool((row[in_col] == 0).all())}
 
-    schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + f", {flag_col} boolean"
-    return df.mapInPandas(run, schema)
+    return map_images(df, fn, [in_col], f"{flag_col} boolean")
 
 
 def drop_all_zero(df: DataFrame, in_col: str = "bytes") -> DataFrame:
@@ -383,11 +378,11 @@ def pseudo_inference(df: DataFrame, in_col: str = "bytes", out_col: str = "pred_
     (windows × overlap-average reproduce the full-image result exactly
     because the 'model' is pointwise)."""
 
-    def fn(arr, _row):
-        score = arr.astype(np.float32).mean(axis=2, keepdims=True) / 255.0
-        return (score > 0.5).astype(np.float32)
+    def fn(row):
+        score = row[in_col].astype(np.float32).mean(axis=2, keepdims=True) / 255.0
+        yield {out_col: (score > 0.5).astype(np.float32)}
 
-    return _map_images(df, fn, in_col, out_col)
+    return map_images(df, fn, [in_col], f"{out_col} binary")
 
 
 def decode_stats(df: DataFrame, in_col: str = "bytes") -> DataFrame:
@@ -396,34 +391,24 @@ def decode_stats(df: DataFrame, in_col: str = "bytes") -> DataFrame:
     groupBy(band).sum() downstream gives the dataset stats with Spark's own
     partial+final aggregation doing the tree-reduce."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands, psum, psumsq, pcount, pmin, pmax = [], [], [], [], [], [], []
-            for image_id, raw in zip(pdf["image_id"].to_numpy(), pdf[in_col].to_numpy()):
-                arr = decode_image(bytes(raw)).astype(np.float64)
-                for b in range(arr.shape[2]):
-                    plane = arr[:, :, b]
-                    valid = plane[plane > NODATA]
-                    ids.append(image_id)
-                    bands.append(b)
-                    psum.append(float(valid.sum()))
-                    psumsq.append(float((valid**2).sum()))
-                    pcount.append(int(valid.size))
-                    pmin.append(float(valid.min()) if valid.size else None)
-                    pmax.append(float(valid.max()) if valid.size else None)
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "band": bands,
-                    "psum": psum,
-                    "psumsq": psumsq,
-                    "pcount": pcount,
-                    "pmin": pmin,
-                    "pmax": pmax,
-                }
-            )
+    def fn(row):
+        arr = row[in_col].astype(np.float64)
+        for b in range(arr.shape[2]):
+            plane = arr[:, :, b]
+            valid = plane[plane > NODATA]
+            yield {
+                "band": b,
+                "psum": float(valid.sum()),
+                "psumsq": float((valid**2).sum()),
+                "pcount": int(valid.size),
+                "pmin": float(valid.min()) if valid.size else None,
+                "pmax": float(valid.max()) if valid.size else None,
+            }
 
-    return df.mapInPandas(
-        run,
-        "image_id string, band int, psum double, psumsq double, pcount long, pmin double, pmax double",
+    return map_images(
+        df,
+        fn,
+        [in_col],
+        "band int, psum double, psumsq double, pcount long, pmin double, pmax double",
+        keep=["image_id"],
     )

@@ -8,14 +8,12 @@ regularized ring. The Spark stage maps them over a WKB geometry column.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..geo import geometry as G
 from ..geo import wkb
+from .raster import map_images
 
 TECHNIQUES = ("adaptive_regularization", "regularization", "hybrid_regularization")
 
@@ -118,20 +116,14 @@ def regularize(df: DataFrame, technique: str = "adaptive_regularization", geom_c
     """Spark stage: regularize each polygon row (exterior ring only — the
     reference's strategies likewise operate on ``exterior.coords``). Invalid/
     empty geometries pass through unchanged (:202-205 guard)."""
-    fn = _FNS[technique]
-    schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + ", reg_wkb binary"
+    reg = _FNS[technique]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for blob in pdf[geom_col]:
-                try:
-                    rings = wkb.polygon_rings(bytes(blob))
-                    outs.append(wkb.dumps_polygon([fn(rings[0])]))
-                except (ValueError, IndexError):
-                    outs.append(bytes(blob))  # pass through invalid geometry
-            out = pdf.copy()
-            out["reg_wkb"] = outs
-            yield out
+    def fn(row):
+        blob = row[geom_col]
+        try:
+            out = wkb.dumps_polygon([reg(wkb.polygon_rings(blob)[0])])
+        except (ValueError, IndexError):
+            out = blob  # pass through invalid geometry
+        yield {"reg_wkb": out}
 
-    return df.mapInPandas(run, schema)
+    return map_images(df, fn, [], "reg_wkb binary")

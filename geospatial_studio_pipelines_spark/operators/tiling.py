@@ -20,12 +20,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import spatial as S
 from ..index import hexgrid
+from .raster import crop_window, map_images
 
 MAX_TILE_PX = 2400
 GRID_TILE_PX = 2200.0
@@ -297,49 +297,33 @@ def chip_and_label(
     """W4 ``chip_and_label_data`` (claimed_curated_upload_v2.py:346-352):
     chip each training raster AND its label mask into the fixed 224-px
     window grid, emitting one (chip, label-chip) pair per window. Spark
-    shape: equi-join image↔label on id, window explode (pure expressions),
-    then ONE mapInPandas cropping both rasters per window — decode happens
-    once per (image, window-batch), pixels never leave the Arrow batch."""
-    from ..codecs.image import decode_image, encode_image
-    from .raster import crop_window
+    shape: equi-join image↔label on id, then one ``raster.map_images`` row
+    per (image, label) that yields the image's ``window_offsets`` grid over
+    its (w, h) — each raster is decoded once, and pixels never leave the
+    Arrow batch."""
+    joined = images.join(labels.select(id_col, label_col), id_col)
 
-    joined = with_windows(images.join(labels.select(id_col, label_col), id_col))
-    id_type = dict(images.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, win_col_off int, win_row_off int, win_w int, win_h int, "
-        "chip_bytes binary, chip_label_bytes binary"
+    def fn(row):
+        img, lab = row[image_col], row[label_col]
+        ww, wh = min(WINDOW, row["w"]), min(WINDOW, row["h"])
+        for c0 in window_offsets(row["w"]):
+            for r0 in window_offsets(row["h"]):
+                yield {
+                    "win_col_off": c0,
+                    "win_row_off": r0,
+                    "win_w": ww,
+                    "win_h": wh,
+                    "chip_bytes": crop_window(img, c0, r0, ww, wh),
+                    "chip_label_bytes": crop_window(lab, c0, r0, ww, wh),
+                }
+
+    return map_images(
+        joined,
+        fn,
+        [image_col, label_col],
+        "win_col_off int, win_row_off int, win_w int, win_h int, chip_bytes binary, chip_label_bytes binary",
+        keep=[id_col],
     )
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            cache: dict = {}
-            for _, row in pdf.iterrows():
-                key = row[id_col]
-                if key not in cache:
-                    cache[key] = (
-                        decode_image(bytes(row[image_col])),
-                        decode_image(bytes(row[label_col])),
-                    )
-                img, lab = cache[key]
-                c0, r0 = int(row["win_col_off"]), int(row["win_row_off"])
-                ww, wh = int(row["win_w"]), int(row["win_h"])
-                rows.append(
-                    {
-                        id_col: key,
-                        "win_col_off": c0,
-                        "win_row_off": r0,
-                        "win_w": ww,
-                        "win_h": wh,
-                        "chip_bytes": encode_image(crop_window(img, c0, r0, ww, wh), "raw"),
-                        "chip_label_bytes": encode_image(crop_window(lab, c0, r0, ww, wh), "raw"),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return joined.mapInPandas(run, out_schema)
 
 
 # ------------------------------------------------------------- oracles

@@ -14,22 +14,19 @@
 Coordinates: pixel space (x=col, y=row), y increasing downward; an affine
 transform (a,b,c,d,e,f) maps to world space like rasterio's Affine.
 
-Spark wrapper: ``vectorize(df)`` is a ``mapInPandas`` stage emitting one row
-per polygon (image_id, class value, WKB, area) — a raster-in/vector-out
-flatMap, the engine's F15.
+Spark wrapper: ``vectorize(df)`` is a ``raster.map_images`` stage emitting
+one row per polygon (image_id, class value, WKB, area) — a raster-in/
+vector-out flatMap, the engine's F15.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..codecs.image import decode_image
 from ..geo import geometry as G
 from ..geo import wkb
+from .raster import map_images
 
 
 def connected_components(mask: np.ndarray) -> np.ndarray:
@@ -192,27 +189,16 @@ def vectorize(
 ) -> DataFrame:
     """F15 as a Spark stage: one output row per extracted polygon."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                arr = decode_image(bytes(row[in_col]))
-                for k, feat in enumerate(
-                    raster_to_polygons(arr, threshold, min_area, simplify_tolerance, class_values)
-                ):
-                    rows.append(
-                        {
-                            "image_id": row["image_id"],
-                            "shape_idx": k,
-                            "class": feat["class"],
-                            "geom_wkb": wkb.dumps_polygon(feat["rings"]),
-                            "area_px": feat["area"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "shape_idx", "class", "geom_wkb", "area_px"]
-            )
+    def fn(row):
+        feats = raster_to_polygons(row[in_col], threshold, min_area, simplify_tolerance, class_values)
+        for k, feat in enumerate(feats):
+            yield {
+                "shape_idx": k,
+                "class": feat["class"],
+                "geom_wkb": wkb.dumps_polygon(feat["rings"]),
+                "area_px": feat["area"],
+            }
 
-    return df.mapInPandas(
-        run, "image_id string, shape_idx int, class int, geom_wkb binary, area_px double"
+    return map_images(
+        df, fn, [in_col], "shape_idx int, class int, geom_wkb binary, area_px double", keep=["image_id"]
     )

@@ -171,3 +171,11 @@ def test_hamming_self_join_bands_once_and_reuses_its_shuffle(spark, tmp_path):
     nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
     assert sum(n.startswith("Exchange hashpartitioning(band, key") for n in nodes) == 1, plan
     assert sum(n.startswith("ReusedExchange") for n in nodes) == 1, plan
+
+
+def test_image_pipeline_has_no_pandas_map(spark):
+    """The image pipeline's row-wise stages run as Arrow batch maps: its
+    physical plan has Python map nodes, and none of them is a pandas one."""
+    plan = _physical(contracts.q_image_pipeline(spark, SF_DIR))
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan, plan

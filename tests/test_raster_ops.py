@@ -473,3 +473,57 @@ def test_change_dtype(spark):
     assert np.array_equal(got, arr.astype(np.uint8))  # numpy cast semantics
     out16 = raster.change_dtype(df, "int16", out_col="i16").collect()[0]
     assert np.array_equal(decode_image(bytes(out16["i16"])), arr.astype(np.int16))
+
+
+def test_bigint_image_ids_keep_their_type(spark):
+    """An int64 image id passes through the per-image stages that emit many
+    rows per image, and through the overlap reassembly, with its type and
+    values unchanged."""
+    from pyspark.sql.types import LongType
+
+    from geospatial_studio_pipelines_spark.operators import vectorize
+
+    def int_ids(df):
+        return df.withColumn("image_id", F.substring_index("image_id", "-", -1).cast("bigint"))
+
+    labels = int_ids(datagen.label_df(spark, 30)).withColumnRenamed("label_bytes", "masked_bytes")
+    polys = vectorize.vectorize(labels, min_area=1.0)
+    assert polys.schema["image_id"].dataType == LongType()
+    got = polys.groupBy("image_id").count().collect()
+    assert {r.image_id: r["count"] for r in got} == {
+        i: datagen.label_row(i)["n_shapes"] for i in (0, 10, 20)
+    }
+
+    stats = raster.decode_stats(int_ids(datagen.images_df(spark, 4)))
+    assert stats.schema["image_id"].dataType == LongType()
+    assert sorted((r.image_id, r.band) for r in stats.collect()) == [
+        (i, b) for i in range(4) for b in range(3)
+    ]
+
+    pred = np.arange(6, dtype=np.float32).reshape(2, 3, 1)
+    windows = spark.createDataFrame(
+        [(7, 3, 2, 0, 0, encode_image(pred[:, :2], "raw")), (7, 3, 2, 1, 0, encode_image(pred[:, 1:], "raw"))],
+        "image_id bigint, w int, h int, win_col_off int, win_row_off int, win_pred_bytes binary",
+    )
+    merged = mosaic.overlap_average(windows)
+    assert merged.schema["image_id"].dataType == LongType()
+    (row,) = merged.collect()
+    assert row.image_id == 7
+    assert np.array_equal(decode_image(bytes(row.merged_bytes)), pred)
+
+
+def test_per_image_stages_share_one_arrow_loop():
+    """Every row-wise pixel and geometry stage goes through one loop: the
+    five stage modules hold exactly one ``mapInArrow`` call between them and
+    no ``mapInPandas`` or ``iterrows``."""
+    import ast
+    from pathlib import Path
+
+    from geospatial_studio_pipelines_spark.operators import regularize, tiling, vectorize
+
+    calls = {"mapInArrow": 0, "mapInPandas": 0, "iterrows": 0}
+    for mod in (raster, masking, vectorize, regularize, tiling):
+        for node in ast.walk(ast.parse(Path(mod.__file__).read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in calls:
+                calls[node.attr] += 1
+    assert calls == {"mapInArrow": 1, "mapInPandas": 0, "iterrows": 0}
