@@ -34,10 +34,11 @@ def map_images(
     ``fn(row)`` gets a dict of the row's columns, each ``decode`` column
     decoded to an HxWxC ndarray, and returns zero or more output dicts over
     the ``out`` fields (a DDL string); an ndarray value is encoded raw. The
-    ``keep`` columns (default: all of ``df``) pass through as Arrow arrays
-    taken by parent row, so their types are ``df``'s own; an ``out`` field
-    named like a kept column replaces it in place. Exceptions raised in
-    ``fn`` propagate unchanged."""
+    ``keep`` columns (default: all of ``df``) pass through with ``df``'s
+    own types; an ``out`` field named like a kept column replaces it in
+    place. Output batches hold at most the session's ``maxRecordsPerBatch``
+    rows, whatever the fan-out. Exceptions raised in ``fn`` propagate
+    unchanged."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import DataType, StructType
 
@@ -49,32 +50,89 @@ def map_images(
     )
     passed = [c for c in keep if c not in by_name]
     types = {f.name: to_arrow_type(f.dataType) for f in fields}
+    cap = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def run(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            cols = rb.to_pydict()
-            parents, outs = [], []
-            for i in range(rb.num_rows):
-                row = {c: v[i] for c, v in cols.items()}
-                for c in decode:
-                    row[c] = decode_image(row[c])
-                for o in fn(row):
-                    parents.append(i)
-                    outs.append(o)
-            if not outs:
-                continue
-            idx = pa.array(parents, type=pa.int64())
-            arrays = {c: rb.column(c).take(idx) for c in passed}
-            for c, t in types.items():
-                vals = [o[c] for o in outs]
-                arrays[c] = pa.array(
-                    [encode_image(v, "raw") if isinstance(v, np.ndarray) else v for v in vals], type=t
-                )
-            yield pa.RecordBatch.from_arrays([arrays[c] for c in schema.names], names=schema.names)
+        return _arrow_loop(batches, fn, decode, passed, types, schema.names, cap)
 
     return df.mapInArrow(run, schema)
+
+
+def _arrow_loop(batches, fn, decode, passed, types, names, cap):
+    """``map_images``'s worker side. Each output is encoded as ``fn`` yields
+    it, so no view of a decoded image outlives its row, and a batch is
+    yielded every ``cap`` outputs (``cap`` <= 0: once per input batch).
+    Kept columns are sliced from the input batch, never converted."""
+    import pyarrow as pa
+
+    def batch(rb, parents, outs):
+        n, p0 = len(parents), parents[0]
+        if parents == list(range(p0, p0 + n)):  # one output per row
+            arrays = {c: rb.column(c).slice(p0, n) for c in passed}
+        else:
+            arrays = {c: pa.concat_arrays([rb.column(c).slice(i, 1) for i in parents]) for c in passed}
+        for c, t in types.items():
+            arrays[c] = _arrow_column([o[c] for o in outs], t)
+        return pa.RecordBatch.from_arrays([arrays[c] for c in names], names=names)
+
+    for rb in batches:
+        cols = rb.to_pydict()
+        parents, outs = [], []
+        for i in range(rb.num_rows):
+            row = {c: v[i] for c, v in cols.items()}
+            for c in decode:
+                row[c] = decode_image(row[c])
+            for o in fn(row):
+                parents.append(i)
+                outs.append(
+                    {c: encode_image(o[c], "raw") if isinstance(o[c], np.ndarray) else o[c] for c in types}
+                )
+                if len(outs) == cap:
+                    yield batch(rb, parents, outs)
+                    parents, outs = [], []
+        if outs:
+            yield batch(rb, parents, outs)
+
+
+#: Arrow type name -> (numpy dtype, numpy kinds it takes without loss)
+_FIXED_WIDTH = {
+    "bool": (np.bool_, "b"),
+    "int32": (np.int32, "iu"),
+    "int64": (np.int64, "iu"),
+    "double": (np.float64, "iuf"),
+}
+
+
+def _arrow_column(vals: list, t):
+    """``vals`` as an Arrow array of type ``t``. The binary, string, bool and
+    numeric fields that stages emit are built from buffers: ``pa.array`` on
+    Python values imports pandas on its first call in each Python worker,
+    about 0.3 s on a task's critical path. Other types, and values numpy
+    would convert lossily, go through ``pa.array`` (which raises on loss)."""
+    import pyarrow as pa
+
+    n, name = len(vals), str(t)
+    valid = np.fromiter((v is not None for v in vals), bool, n)
+    nulls = None if valid.all() else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    if name in ("binary", "string"):
+        items = [b"" if v is None else v.encode() if isinstance(v, str) else v for v in vals]
+        ends = np.cumsum([len(b) for b in items], dtype=np.int64)
+        if n and ends[-1] >= 2**31:
+            raise ValueError(
+                f"{ends[-1]} bytes in one {name} batch; lower spark.sql.execution.arrow.maxRecordsPerBatch"
+            )
+        offsets = np.concatenate([[0], ends]).astype(np.int32)
+        return pa.Array.from_buffers(t, n, [nulls, pa.py_buffer(offsets), pa.py_buffer(b"".join(items))])
+    if name not in _FIXED_WIDTH:
+        return pa.array(vals, type=t)
+    dtype, kinds = _FIXED_WIDTH[name]
+    raw = np.array([dtype() if v is None else v for v in vals])
+    data = raw.astype(dtype)
+    if raw.dtype.kind not in kinds or not np.array_equal(data, raw, equal_nan=raw.dtype.kind == "f"):
+        return pa.array(vals, type=t)
+    if name == "bool":
+        data = np.packbits(data, bitorder="little")
+    return pa.Array.from_buffers(t, n, [nulls, pa.py_buffer(data)])
 
 
 # --------------------------------------------------------- F1: to_decibels

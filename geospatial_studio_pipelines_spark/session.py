@@ -3,8 +3,8 @@
 Design notes (100 TB target):
 
 * Arrow execution is mandatory — every custom operator is a vectorized
-  pandas UDF / ``mapInPandas`` / ``applyInPandas``; row-at-a-time Python UDFs
-  are banned (BASELINE.json input_hint).
+  pandas UDF, ``mapInArrow`` (``raster.map_images``) or ``applyInPandas``;
+  row-at-a-time Python UDFs are banned (BASELINE.json input_hint).
 * AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
   We still salt explicitly for pathological spatial skew (a single AOI
   covering a continent — the analog of the reference's global land-polygon
@@ -12,7 +12,9 @@ Design notes (100 TB target):
   split *join* skew, not a skewed ``applyInPandas`` group.
 * ``maxRecordsPerBatch`` bounds decoded-image memory inside Arrow UDF
   batches — the Spark-side fix for the reference's pod-OOM failure mode
-  (images decoded one at a time with no memory budget).
+  (images decoded one at a time with no memory budget). ``map_images``
+  caps its output batches at the same row count, so a stage that yields
+  many rows per image (windows, polygons) stays bounded too.
 * shuffle partitions default to 2× cores locally; on a real cluster this is
   set per-job to ≈ input_bytes / 128MB and AQE coalesces from there.
 * DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
@@ -50,7 +52,8 @@ def spark_session(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
-    ``arrow_batch_rows`` caps rows per Arrow batch entering pandas UDFs.
+    ``arrow_batch_rows`` caps rows per Arrow batch entering pandas UDFs
+    and leaving ``raster.map_images``.
     256 rows × ~1 MB decoded image ≈ 256 MB peak per task — tune down for
     larger imagery. Relational-only jobs may raise it.
     """

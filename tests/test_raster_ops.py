@@ -527,3 +527,108 @@ def test_per_image_stages_share_one_arrow_loop():
             if isinstance(node, ast.Attribute) and node.attr in calls:
                 calls[node.attr] += 1
     assert calls == {"mapInArrow": 1, "mapInPandas": 0, "iterrows": 0}
+
+
+def test_map_images_caps_output_batches():
+    """A high-fan-out stage yields output batches of at most the cap, with
+    each output's kept columns taken from its own input row; a one-to-one
+    stage is capped the same way."""
+    import pyarrow as pa
+
+    img = np.arange(12, dtype=np.float32).reshape(2, 6, 1)
+    rb = pa.RecordBatch.from_pydict(
+        {"image_id": pa.array([10, 11, 12], pa.int64()), "bytes": [encode_image(img * k, "raw") for k in range(3)]}
+    )
+    types = {"c0": pa.int32(), "chip": pa.binary()}
+    names = ["image_id", "c0", "chip"]
+
+    def windows(row):
+        for c0 in range(5):
+            yield {"c0": c0, "chip": row["bytes"][:, c0 : c0 + 2]}
+
+    got = list(raster._arrow_loop([rb], windows, ["bytes"], ["image_id"], types, names, 4))
+    assert [b.num_rows for b in got] == [4, 4, 4, 3]
+    t = pa.Table.from_batches(got)
+    assert t.schema.field("image_id").type == pa.int64()
+    assert t.column("image_id").to_pylist() == [10] * 5 + [11] * 5 + [12] * 5
+    assert t.column("c0").to_pylist() == list(range(5)) * 3
+    for iid, c0, chip in zip(*(t.column(c).to_pylist() for c in names)):
+        assert np.array_equal(decode_image(chip), (img * (iid - 10))[:, c0 : c0 + 2])
+
+    def whole(row):
+        yield {"c0": 0, "chip": row["bytes"]}
+
+    one = list(raster._arrow_loop([rb], whole, ["bytes"], ["image_id"], types, names, 2))
+    assert [b.column("image_id").to_pylist() for b in one] == [[10, 11], [12]]
+
+
+def test_chip_and_label_under_a_small_batch_cap(spark):
+    """With a batch cap below one image's window count, chip_and_label's
+    output is the same rows as under the session default."""
+    from geospatial_studio_pipelines_spark.operators import tiling
+
+    images = datagen.images_df(spark, 40)
+    labels = datagen.label_df(spark, 40)
+
+    def chips():
+        rows = tiling.chip_and_label(images, labels).collect()
+        return sorted(tuple(r) for r in rows)
+
+    want = chips()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = chips()
+    finally:
+        spark.conf.set(key, old)
+    assert got == want and len(want) > 4
+
+
+def test_map_images_loop_builds_columns_without_pandas():
+    """The per-row loop builds every output and kept column without
+    importing pandas (``pa.array`` on Python values imports it, about 0.3 s
+    of a fresh Python worker's first task), and those columns equal what
+    ``pa.array`` builds, nulls included."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = """
+import sys
+import numpy as np
+import pyarrow as pa
+from geospatial_studio_pipelines_spark.operators.raster import _arrow_loop
+
+ids = pa.Array.from_buffers(pa.int64(), 3, [None, pa.py_buffer(np.array([7, 8, 9]))])
+rb = pa.RecordBatch.from_arrays([ids], names=["id"])
+types = {"i": pa.int32(), "l": pa.int64(), "d": pa.float64(), "f": pa.bool_(), "s": pa.string(), "b": pa.binary()}
+rows = [
+    {"i": 1, "l": 2**40, "d": 0.5, "f": True, "s": "a", "b": b"x"},
+    {"i": None, "l": None, "d": None, "f": None, "s": None, "b": None},
+    {"i": -3, "l": 0, "d": float("nan"), "f": False, "s": "é", "b": b""},
+]
+
+def fn(row):
+    return rows[: row["id"] - 6]  # 1, 2 and 3 outputs: a fan-out
+
+def whole(row):
+    yield rows[row["id"] - 7]
+
+names = ["id", *types]
+fan = pa.Table.from_batches(list(_arrow_loop([rb], fn, [], ["id"], types, names, 4)))
+one = pa.Table.from_batches(list(_arrow_loop([rb], whole, [], ["id"], types, names, 0)))
+imported = "pandas" in sys.modules
+for t, want in ((fan, rows[:1] + rows[:2] + rows), (one, rows)):
+    t.validate(full=True)
+    for c, ty in types.items():
+        want_c = pa.array([r[c] for r in want], type=ty).to_pylist()
+        assert t.schema.field(c).type == ty and repr(t.column(c).to_pylist()) == repr(want_c), c
+assert fan.column("id").to_pylist() == [7, 8, 8, 9, 9, 9]
+assert one.column("id").to_pylist() == [7, 8, 9]
+print(imported)
+"""
+    root = Path(__file__).resolve().parents[1]
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "False"
